@@ -8,15 +8,20 @@ persisted canonical output:
     -> canonicalize: frozen extract + frozen tokenizer, fused in one
                 Arrow pandas pass keyed by url; persisted    (S3+T1)
     -> doc_id:  deterministic dense two-pass assignment over the
-                persisted urls                               (T2, 1 small shuffle)
+                persisted urls, + doc_id_offset on a delta build
+                                                             (T2, 1 small shuffle)
     -> lexicon: per-batch DISTINCT terms -> vocab-gated term ids
                 (driver-sorted broadcast dict <= cap [B:6]; range-
                 partitioned sorted-rank + shuffle join above — same
-                sorted-rank id space, byte-identical)        (T3)
+                sorted-rank id space, byte-identical); a build given
+                a shared_lexicon takes the ids from it instead (a
+                delta build grows it with these terms first) (T3)
     -> tok:     mapInPandas -> (doc_id, term_id, tf, dl) integer
                 stream, PACKED in-kernel into 20B/posting binary blobs
                 keyed by bucket(term_id, shard) (TOK_BLOB_SCHEMA)
     -> tok checkpoint: parquet of blobs                      (resumability §4.4)
+    -> stats:   n_docs / avgdl from the written docs table, + the
+                collection's prior_stats on a delta build
     -> THE shuffle: repartition(n_parts_enc, bucket) — semantically the
                 "salted repartition-by-term +
                 sortWithinPartitions(term, docID)" of BASELINE.json:6
@@ -55,6 +60,7 @@ from __future__ import annotations
 
 import os
 import time
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -606,8 +612,12 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
                 n_parts: int | None = None,
                 resume: bool = False,
                 quantize: bool = False,
-                shared_lexicon: DataFrame | None = None,
+                shared_lexicon: (DataFrame
+                                 | Callable[[DataFrame], dict[str, int]]
+                                 | None) = None,
                 global_stats: tuple[int, float] | None = None,
+                prior_stats: tuple[int, int] | None = None,
+                doc_id_offset: int = 0,
                 broadcast_vocab_max: int | None = None,
                 table_format: str | None = None,
                 extractor: str = "frozen") -> dict:
@@ -624,7 +634,21 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
     $IRKIT_TABLE_FORMAT) governs every index artifact
     (tok/docs/postings/terms/stats/lineage) via sources/catalog:
     under 'iceberg', out_dir is a catalog namespace and writes go
-    through writeTo()/overwritePartitions()."""
+    through writeTo()/overwritePartitions().
+
+    Delta builds (one batch of a growing collection — streaming ingest,
+    update_index) pass the collection's shared state instead of
+    re-deriving it from the batch:
+      shared_lexicon  the (term, term_id) lexicon, or a callable that
+                      grows it: it receives this batch's terms (a `term`
+                      column from the canonicalize pass) and returns
+                      {term: term_id} for each of them;
+      prior_stats     (n_docs, coll_len) before this batch: scoring
+                      uses the running n_docs / avgdl, i.e. these plus
+                      this build's docs table (global_stats, if given,
+                      is taken as is instead);
+      doc_id_offset   added to the ids the build assigns on the
+                      key_col path (explicit doc_id_col ids are kept)."""
     t0 = time.monotonic()
     phases: dict[str, float] = {}
     _last = [t0]
@@ -775,6 +799,9 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
             src0 = src_all.filter(F.col("url").isNotNull())
             mapping, n_ids = dense_id_mapping(src0, "url", "doc_id",
                                               n_buckets)
+            if doc_id_offset:
+                mapping = mapping.withColumn(
+                    "doc_id", F.col("doc_id") + doc_id_offset)
             # broadcast only while the (url, doc_id) mapping fits the
             # driver/executors (same gate as assign_dense_ids); at
             # 10^9-10^12 docs the mapping is corpus-sized and the join
@@ -798,15 +825,19 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
         if shared_lexicon is not None:
             # incremental batch build: ids come from the shared, growing
             # lexicon; the batch vocab is bounded, so the dict broadcast
-            # is safe
-            lex_df = (batch_terms.distinct()
-                      .join(shared_lexicon.select("term", "term_id"),
-                            "term")
-                      .select(F.col("term_id").cast("int").alias("term_id"),
-                              "term")
-                      .persist())
-            bc = spark.sparkContext.broadcast(
-                {r["term"]: r["term_id"] for r in lex_df.collect()})
+            # is safe. A callable grows the lexicon and returns the
+            # batch's ids itself, from the one collect it needs anyway
+            if callable(shared_lexicon):
+                term_ids = shared_lexicon(batch_terms)
+            else:
+                term_ids = {r["term"]: r["term_id"] for r in
+                            batch_terms.distinct()
+                            .join(shared_lexicon.select(
+                                "term", F.col("term_id").cast("int")
+                                .alias("term_id")), "term")
+                            .collect()}
+            bc = spark.sparkContext.broadcast(term_ids)
+            lex_df = None
         else:
             vocab = [r[0] for r in
                      batch_terms.distinct().limit(vocab_cap + 1).collect()]
@@ -910,14 +941,15 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
                     F.sum("doc_len").alias("len"),
                     F.max("doc_id").alias("mx")).collect()[0]
     coll_len = int(glob["len"] or 0)
+    # batch build inside a larger collection (SURVEY.md U1): scoring
+    # constants must come from the FULL collection or batch indexes
+    # would not be merge-compatible
     if global_stats is not None:
-        # batch build inside a larger collection (SURVEY.md U1): scoring
-        # constants must come from the FULL collection or batch indexes
-        # would not be merge-compatible
         n_docs, avgdl = int(global_stats[0]), float(global_stats[1])
     else:
-        n_docs = int(glob["n"])
-        avgdl = coll_len / n_docs if n_docs else 1.0
+        n0, len0 = prior_stats or (0, 0)
+        n_docs = int(n0) + int(glob["n"])
+        avgdl = (int(len0) + coll_len) / n_docs if n_docs else 1.0
     max_doc = int(glob["mx"] if glob["mx"] is not None else 0)
     n_shards = max(1, (max(max_doc + 1, n_docs) + docs_per_shard - 1)
                    // docs_per_shard)
@@ -1141,7 +1173,8 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
     write_artifact_driver(spark, stats_tbl, out_dir, "stats", fmt=fmt)
     _mark("lineage_stats")
 
-    return {"n_docs": n_docs, "avgdl": avgdl, "n_shards": n_shards,
+    return {"n_docs": n_docs, "avgdl": avgdl, "coll_len": coll_len,
+            "docs_built": int(glob["n"]), "n_shards": n_shards,
             "total_postings": int(total_postings), "wall_ms": wall_ms,
             "postings_per_sec": (total_postings / (wall_ms / 1000.0)
                                  if wall_ms else 0.0),

@@ -44,41 +44,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irkit_spark import config
-
-_LEX_WINDOW_MAX = 100_000
-
-
-def _grow_lexicon_df(old_lex: DataFrame, batch_terms: DataFrame,
-                     next_term_id: int,
-                     window_max: int = _LEX_WINDOW_MAX
-                     ) -> tuple[DataFrame, int]:
-    """Old lexicon plus the batch's unseen terms under new dense ids
-    (existing ids never move — built batch indexes stay valid). Same
-    gate as streaming ingest's _grow_lexicon: small deltas (the steady
-    state) take one sorted window; a huge delta routes through
-    plans/dense_ids.sorted_rank_mapping (no single-task window). Both
-    assign rank-in-sorted-order + next_term_id, so the id space is
-    identical either way."""
-    from pyspark.sql import Window
-    new_d = (batch_terms.select("term")
-             .join(old_lex.select("term"), "term", "left_anti")
-             .distinct().persist())
-    n_new = new_d.count()
-    if n_new > window_max:
-        from irkit_spark.plans.dense_ids import sorted_rank_mapping
-        new_ids = (sorted_rank_mapping(new_d, "term", "__rank")
-                   .withColumn("term_id",
-                               (F.col("__rank") + next_term_id)
-                               .cast("int"))
-                   .select("term", "term_id"))
-    else:
-        w = Window.orderBy("term")
-        new_ids = new_d.withColumn(
-            "term_id",
-            (F.row_number().over(w) - 1 + next_term_id).cast("int"))
-    return old_lex.unionByName(new_ids), n_new
-
 
 def update_index(spark: SparkSession, in_dir: str, new_pages: DataFrame,
                  out_dir: str, *,
@@ -147,14 +112,14 @@ def update_index(spark: SparkSession, in_dir: str, new_pages: DataFrame,
                   .select("partition_id", "doc_id").persist())
     n_superseded = superseded.count()
 
-    # fresh dense ids above everything already assigned
+    # explicit ids must sit above everything already assigned; default
+    # ids are assigned by the delta build, offset past them
     if doc_id_col is not None:
-        ids = batch.withColumn("doc_id",
-                               F.col(doc_id_col).cast("long"))
-        bad = ids.agg(
-            F.min("doc_id").alias("mn"),
-            (F.count("*") - F.countDistinct("doc_id")).alias("dup"),
-            F.sum(F.col("doc_id").isNull().cast("int")).alias("nul"),
+        nid = F.col(doc_id_col).cast("long")
+        bad = batch.agg(
+            F.min(nid).alias("mn"),
+            (F.count("*") - F.countDistinct(nid)).alias("dup"),
+            F.sum(nid.isNull().cast("int")).alias("nul"),
         ).collect()[0]
         if int(bad["dup"]) or int(bad["nul"] or 0) \
                 or int(bad["mn"]) < next_doc_id:
@@ -163,58 +128,45 @@ def update_index(spark: SparkSession, in_dir: str, new_pages: DataFrame,
                 f"explicit {doc_id_col!r} ids must be distinct, "
                 f"non-null, and >= {next_doc_id} (the index's next "
                 "free id)")
-    else:
-        from irkit_spark.plans.dense_ids import dense_id_mapping
-        mapping, _ = dense_id_mapping(
-            batch.select(key_str.alias("__k")), "__k", "doc_id")
-        mapping = mapping.withColumn(
-            "doc_id", F.col("doc_id") + next_doc_id)
-        ids = batch.withColumn("__k", key_str).join(
-            F.broadcast(mapping), "__k").drop("__k")
 
-    # the SAME text the delta build will tokenize (ingest contract)
-    if text_from_html:
-        from irkit_spark.functions.extract import extract_text_udf
-        src = ids.withColumn(
-            "text", extract_text_udf(extractor)(F.col("html")))
-    else:
-        src = ids
-
-    # grow the lexicon with the batch's unseen terms
-    from irkit_spark.functions.tokenize import distinct_terms_iter
+    # the delta build grows the index's lexicon with the batch's unseen
+    # terms and scores against the post-update totals: superseded docs
+    # still count (the delete contract freezes stats until compact), so
+    # those are the old totals plus the batch's docs table
+    from irkit_spark.plans.dense_ids import grow_lexicon
     old_lex = (read_artifact(spark, in_dir, "terms", fmt=fmt)
                .select("term", "term_id"))
     tg = old_lex.agg(F.max("term_id").alias("mx")).collect()[0]
-    batch_terms = (src.select("text")
-                   .mapInPandas(lambda it: distinct_terms_iter(it, "text"),
-                                schema="term string").distinct())
-    lex, n_new_terms = _grow_lexicon_df(
-        old_lex, batch_terms, int(tg["mx"] or -1) + 1)
+    new_terms = []
 
-    # running collection stats: superseded docs still count (the
-    # delete contract freezes stats until compact), so the post-update
-    # totals are old + batch
-    batch_len = int(src.select(F.size(F.regexp_extract_all(
-        F.lower("text"), F.lit(config.TOKEN_RE), 0)).alias("l"))
-        .agg(F.sum("l")).collect()[0][0] or 0)
-    n_docs_after = int(std["n_docs"]) + n_new
-    avgdl_after = (int(std["coll_len"]) + batch_len) / n_docs_after
+    def grow(batch_terms):
+        ids, new = grow_lexicon(old_lex, batch_terms,
+                                int(tg["mx"] or -1) + 1)
+        new_terms.extend(new)
+        return ids
 
     delta = out_dir.rstrip("/").rstrip(os.sep) + ".__delta__"
     if fmt != "iceberg":
         shutil.rmtree(delta, ignore_errors=True)
     from irkit_spark.operators.build import build_index
-    build_index(spark, ids, delta,
+    build_index(spark, batch, delta,
                 codec=std["codec"], block_size=int(std["block_size"]),
                 docs_per_shard=int(std["docs_per_shard"]),
-                text_from_html=text_from_html, doc_id_col="doc_id",
-                key_col=key_col, n_parts=n_parts,
-                shared_lexicon=lex,
-                global_stats=(n_docs_after, avgdl_after),
+                text_from_html=text_from_html, doc_id_col=doc_id_col,
+                key_col=key_col, doc_id_offset=next_doc_id,
+                n_parts=n_parts, shared_lexicon=grow,
+                prior_stats=(int(std["n_docs"]), int(std["coll_len"])),
                 table_format=table_format, extractor=extractor)
     if artifact_exists(spark, in_dir, "positions", fmt=fmt):
+        # the same text the delta build tokenized, keyed like its docs
         from irkit_spark.operators.positions import build_positions
-        build_positions(spark, src, delta, doc_id_col="doc_id",
+        text = F.col("text")
+        if text_from_html:
+            from irkit_spark.functions.extract import extract_text_udf
+            text = extract_text_udf(extractor)(F.col("html"))
+        src = batch.select(key_str.alias("url"), text.alias("text"),
+                           *([doc_id_col] if doc_id_col else []))
+        build_positions(spark, src, delta, doc_id_col=doc_id_col,
                         n_parts=n_parts, table_format=table_format)
 
     from irkit_spark.operators.merge import merge_indexes
@@ -228,6 +180,6 @@ def update_index(spark: SparkSession, in_dir: str, new_pages: DataFrame,
     if fmt != "iceberg":
         shutil.rmtree(delta, ignore_errors=True)
     m.update({"n_added": int(n_new), "n_superseded": int(n_superseded),
-              "n_new_terms": int(n_new_terms),
+              "n_new_terms": len(new_terms),
               "wall_ms": int((time.monotonic() - t0) * 1000)})
     return m

@@ -121,6 +121,31 @@ def sorted_rank_mapping(df: DataFrame, key: str, id_col: str,
             .drop("__p", "__offset"))
 
 
+def grow_lexicon(lexicon: DataFrame | None, batch_terms: DataFrame,
+                 next_term_id: int) -> tuple[dict, list]:
+    """Term ids for the distinct terms of `batch_terms` (a `term`
+    column): a term's id in `lexicon` (term, term_id) when it has one,
+    else a new dense id, next_term_id + its rank among the unseen terms
+    in sorted order. Existing ids never move, so indexes built against
+    the old lexicon stay valid. Returns ({term: term_id} for every batch
+    term, the unseen terms in id order).
+
+    One Spark job: the batch vocabulary is collected and the unseen
+    terms are sorted on the driver. build_index broadcasts exactly this
+    dict, so it has to fit the driver either way. Python's code-point
+    order is Spark's UTF-8 byte order, so the ids equal a Spark-side
+    sorted rank."""
+    terms = batch_terms.select("term").distinct()
+    if lexicon is None:
+        terms = terms.withColumn("term_id", F.lit(None).cast("int"))
+    else:
+        terms = terms.join(lexicon.select("term", "term_id"), "term", "left")
+    ids = {r["term"]: r["term_id"] for r in terms.collect()}
+    new = sorted(t for t, i in ids.items() if i is None)
+    ids.update(zip(new, range(next_term_id, next_term_id + len(new))))
+    return ids, new
+
+
 # Portable 31-bit Karp-Rabin fold (base 257 mod the Mersenne prime
 # 2^31-1 — the repo-wide portable-hash scheme, pipeline/dedup.py) of a
 # label column, written DECLARATIVELY so the DuckDB oracle reproduces

@@ -4,11 +4,18 @@ irkit itself is batch-only (SURVEY.md §2.10); its incrementality is
 "build batch indexes, then k-way merge" ([pub:tools/irk-merge]). This
 module is the Spark-native form of exactly that: a `readStream` over an
 arriving `pages` directory drives `foreachBatch`, each micro-batch
-becomes one batch index (operators/build.py with a SHARED, growing
-lexicon and running collection stats), and `merge_indexes` folds the
-batches into the serving index. Checkpointing gives exactly-once batch
-processing across restarts; per-shard lineage inside each batch build
-gives intra-batch resumability (§4.4).
+becomes one batch index, and `merge_indexes` folds the batches into the
+serving index. Checkpointing gives exactly-once batch processing across
+restarts; per-shard lineage inside each batch build gives intra-batch
+resumability (§4.4).
+
+A micro-batch is one delta build_index call (operators/build.py) and
+nothing else: its single canonicalize pass (extract + tokenize, run
+once per page) feeds the doc ids (continuing after every doc ingested
+so far), the growth of the SHARED lexicon (from the pass's own
+distinct-term rows) and the running collection stats (the prior
+totals plus the batch's docs table). The counters are committed from
+that docs table, so they count exactly the docs that were indexed.
 
 State kept under `out_dir/_state` (all driver-written, tiny):
   lexicon/   (term, term_id) parquet — ids grow densely, never change
@@ -23,12 +30,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from pyspark.sql import SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irkit_spark.operators.build import build_index
 from irkit_spark.operators.merge import merge_indexes
+from irkit_spark.plans.dense_ids import grow_lexicon
 from irkit_spark.sources.pages import PAGES_SCHEMA
 
 _COUNTERS = "counters.json"
@@ -57,57 +68,39 @@ def _save_counters(out_dir: str, c: dict):
     os.replace(tmp, pth)
 
 
-def _grow_lexicon(spark, out_dir: str, batch_terms, counters: dict,
-                  window_max: int = 100_000):
-    """Append unseen terms with new dense ids; existing ids never move
-    (so already-built batch indexes stay valid).
+def _grow_lexicon(spark, out_dir: str, batch_terms, counters: dict
+                  ) -> dict:
+    """Grow the on-disk shared lexicon with the batch's unseen terms
+    (plans/dense_ids.grow_lexicon); returns the batch's
+    {term: term_id}.
 
-    Id assignment is gated on the NEW-term count: small deltas (the
-    steady state — most batches add few terms) use one global sorted
-    window; above `window_max` (e.g. the FIRST micro-batch of a
-    web-scale stream, which carries the whole vocabulary) ids come
-    from plans/dense_ids.sorted_rank_mapping — range-partitioned
-    sorted rank, no single-task window (VERDICT r3 item 8). Both
-    assign rank-in-sorted-order + next_term_id, so the id space is
-    identical either way."""
+    The next free id is the lexicon's row count on disk (ids are
+    dense), not counters.json: the lexicon is written before the
+    counters commit, so a batch that fails in between and is replayed
+    finds its terms already there and must not hand out their ids a
+    second time."""
+    import pyarrow.parquet as pq
     lex_path = os.path.join(_state_dir(out_dir), "lexicon")
-    from pyspark.sql import Window
+    lex, next_id = None, 0
     if os.path.exists(os.path.join(lex_path, "_SUCCESS")):
         lex = spark.read.parquet(lex_path)
-        new = batch_terms.join(lex.select("term"), "term", "left_anti")
-    else:
-        lex = None
-        new = batch_terms
-    new_d = new.select("term").distinct().persist()
-    n_new = new_d.count()
-    if n_new > window_max:
-        from irkit_spark.plans.dense_ids import sorted_rank_mapping
-        new_ids = (sorted_rank_mapping(new_d, "term", "__rank")
-                   .withColumn(
-                       "term_id",
-                       (F.col("__rank") + counters["next_term_id"])
-                       .cast("int"))
-                   .select("term", "term_id"))
-    else:
-        w = Window.orderBy("term")
-        new_ids = new_d.withColumn(
-            "term_id",
-            (F.row_number().over(w) - 1 + counters["next_term_id"])
-            .cast("int"))
-    updated = new_ids if lex is None else lex.unionByName(new_ids)
-    tmp = lex_path + "_tmp"
-    # coalesce only small lexicons into one file; a huge first batch
-    # keeps its partitioned layout
-    if n_new <= window_max and (lex is None or lex.rdd.getNumPartitions() == 1):
-        updated = updated.coalesce(1)
-    updated.write.mode("overwrite").parquet(tmp)
-    new_d.unpersist()
-    if os.path.exists(lex_path):
-        import shutil
-        shutil.rmtree(lex_path)
-    os.rename(tmp, lex_path)
-    counters["next_term_id"] += n_new
-    return spark.read.parquet(lex_path)
+        next_id = sum(pq.read_metadata(os.path.join(lex_path, f)).num_rows
+                      for f in os.listdir(lex_path)
+                      if f.endswith(".parquet") and f[0] not in "._")
+    ids, new = grow_lexicon(lex, batch_terms, next_id)
+    counters["next_term_id"] = next_id + len(new)
+    if new:
+        new_ids = spark.createDataFrame(pd.DataFrame({
+            "term": pd.Series(new, dtype="object"),
+            "term_id": np.arange(next_id, next_id + len(new),
+                                 dtype=np.int32)}),
+            "term string, term_id int")
+        grown = new_ids if lex is None else lex.unionByName(new_ids)
+        tmp = lex_path + "_tmp"
+        grown.coalesce(1).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(lex_path, ignore_errors=True)
+        os.rename(tmp, lex_path)
+    return ids
 
 
 def process_batch(spark: SparkSession, batch_df, out_dir: str,
@@ -115,7 +108,17 @@ def process_batch(spark: SparkSession, batch_df, out_dir: str,
                   epoch_id: int | None = None,
                   extractor: str = "frozen",
                   positions: bool = False) -> dict:
-    """One micro-batch -> one batch index with global ids/stats.
+    """One micro-batch of pages (url, html) -> one batch index with
+    global ids/stats.
+
+    Three steps: check the epoch, run one delta build_index, commit the
+    counters. The build extracts and tokenizes every page once; from
+    that one pass it numbers the docs after `next_doc_id`, grows the
+    shared lexicon and derives the running (n_docs, avgdl). The
+    committed n_docs / coll_len / next_doc_id then advance by the
+    batch's docs table: a row with a NULL url is never indexed, so it
+    is not counted either. A batch that indexes no doc adds no batch
+    dir.
 
     Idempotent per epoch: foreachBatch replays a micro-batch when the
     driver crashes between state mutation and the checkpoint commit, so
@@ -126,54 +129,32 @@ def process_batch(spark: SparkSession, batch_df, out_dir: str,
     c = _load_counters(out_dir)
     if epoch_id is not None and epoch_id in c.get("epochs", []):
         return c
-    batch_df = batch_df.cache()
-    n = batch_df.count()
-    if n == 0:
-        batch_df.unpersist()
-        return c
-    # dense doc ids continuing after everything ingested so far
-    from irkit_spark.plans.dense_ids import dense_id_mapping
-    mapping, _ = dense_id_mapping(batch_df, "url", "doc_id")
-    mapping = mapping.withColumn(
-        "doc_id", F.col("doc_id") + c["next_doc_id"])
-    ids = batch_df.join(F.broadcast(mapping), "url")
-
-    # grow the shared lexicon with this batch's unseen terms
-    from irkit_spark.functions.extract import extract_text_udf
-    from irkit_spark.functions.tokenize import distinct_terms_iter
-    src = ids.withColumn("text",
-                         extract_text_udf(extractor)(F.col("html")))
-    batch_terms = (src.select("text")
-                   .mapInPandas(lambda it: distinct_terms_iter(it, "text"),
-                                schema="term string").distinct())
-    lex = _grow_lexicon(spark, out_dir, batch_terms, c)
-
-    # running collection stats (drift covered by bound_slack at merge)
-    batch_len = (src.select(F.size(F.regexp_extract_all(
-        F.lower("text"), F.lit("[a-z0-9]+"), 0)).alias("l"))
-        .agg(F.sum("l")).collect()[0][0] or 0)
-    n_docs = c["n_docs"] + n
-    coll_len = c["coll_len"] + int(batch_len)
-    avgdl = coll_len / n_docs
-
     bdir = os.path.join(out_dir, "batches", f"b{len(c['batches']):05d}")
-    build_index(spark, ids, bdir, codec=codec,
-                docs_per_shard=docs_per_shard, text_from_html=True,
-                doc_id_col="doc_id", shared_lexicon=lex,
-                global_stats=(n_docs, avgdl), extractor=extractor)
-    if positions:
-        # src already carries the SAME extracted text the build
-        # tokenized (extract_text_udf(extractor)); runs before the
-        # counters commit so a crash replays the whole batch
-        from irkit_spark.operators.positions import build_positions
-        build_positions(spark, src, bdir, doc_id_col="doc_id")
-    c.update({"n_docs": n_docs, "coll_len": coll_len,
-              "next_doc_id": c["next_doc_id"] + n})
-    c["batches"].append(bdir)
+    m = build_index(spark, batch_df, bdir, codec=codec,
+                    docs_per_shard=docs_per_shard, text_from_html=True,
+                    doc_id_offset=c["next_doc_id"],
+                    shared_lexicon=lambda terms: _grow_lexicon(
+                        spark, out_dir, terms, c),
+                    prior_stats=(c["n_docs"], c["coll_len"]),
+                    extractor=extractor)
+    if m["docs_built"]:
+        if positions:
+            # the same extracted text the build tokenized, joined on url
+            # to the ids this batch's docs table assigned; runs before
+            # the counters commit so a crash replays the whole batch
+            from irkit_spark.functions.extract import extract_text_udf
+            from irkit_spark.operators.positions import build_positions
+            build_positions(spark, batch_df.withColumn(
+                "text", extract_text_udf(extractor)(F.col("html"))), bdir)
+        c.update({"n_docs": m["n_docs"],
+                  "coll_len": c["coll_len"] + m["coll_len"],
+                  "next_doc_id": c["next_doc_id"] + m["docs_built"]})
+        c["batches"].append(bdir)
+    else:
+        shutil.rmtree(bdir, ignore_errors=True)
     if epoch_id is not None:
         c.setdefault("epochs", []).append(epoch_id)
     _save_counters(out_dir, c)
-    batch_df.unpersist()
     return c
 
 

@@ -105,6 +105,49 @@ def test_streaming_epoch_replay_is_noop(spark, tmp_path):
         assert json.load(f)["n_docs"] == 60
 
 
+def test_streaming_replay_after_lexicon_write_keeps_term_ids_unique(
+        spark, tmp_path, monkeypatch):
+    """A micro-batch that fails after growing the shared lexicon but
+    before its counters commit, then replays, must not hand its new
+    term ids out a second time to the next batch: term_id stays unique
+    and next_term_id equals the lexicon's row count."""
+    import json
+
+    import irkit_spark.sources.catalog as catalog
+    from irkit_spark.sources.pages import PAGES_SCHEMA, pages_pandas
+    from irkit_spark.streaming.ingest import process_batch
+    out = str(tmp_path / "sidx")
+    pdf = pages_pandas(180)
+    dfs = [spark.createDataFrame(pdf.iloc[i:i + 60], PAGES_SCHEMA)
+           for i in (0, 60, 120)]
+    process_batch(spark, dfs[0], out, docs_per_shard=50, epoch_id=0)
+    real = catalog.write_artifact
+
+    def fail_once(df, base, name, *a, **kw):
+        if name == "tok":     # after the lexicon write, inside the build
+            monkeypatch.setattr(catalog, "write_artifact", real)
+            raise RuntimeError("injected build failure")
+        return real(df, base, name, *a, **kw)
+
+    monkeypatch.setattr(catalog, "write_artifact", fail_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        process_batch(spark, dfs[1], out, docs_per_shard=50, epoch_id=1)
+    lex_path = os.path.join(out, "_state", "lexicon")
+    n_after_fail = spark.read.parquet(lex_path).count()
+    c1 = process_batch(spark, dfs[1], out, docs_per_shard=50, epoch_id=1)
+    assert c1["next_term_id"] == n_after_fail
+    c2 = process_batch(spark, dfs[2], out, docs_per_shard=50, epoch_id=2)
+    lex = spark.read.parquet(lex_path)
+    n = lex.count()
+    assert n > n_after_fail            # the last batch brought new terms
+    assert lex.select("term_id").distinct().count() == n
+    assert sorted(r[0] for r in lex.select("term_id").collect()) \
+        == list(range(n))
+    assert c2["next_term_id"] == n and c2["epochs"] == [0, 1, 2]
+    with open(os.path.join(out, "_state", "counters.json")) as f:
+        assert json.load(f)["next_term_id"] == n
+
+
 def test_resume_with_all_shards_done_rewrites_terms(spark, pages_small,
                                                     tmp_path):
     """resume=True over a finished build reuses tok/docs/terms; the
