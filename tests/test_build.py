@@ -123,11 +123,43 @@ def test_index_content_parallelism_invariant(spark, pages_small,
     assert da == db
 
 
+def _assert_rows_match_reference(idx):
+    """Every postings row equals functions.codecs.encode_blocks (the
+    reference block encoder) rebuilt from the row's decoded docs and
+    tfs, the docs-table doc_len and the index avgdl: blocks, n_docs,
+    cf, max_norm and wire_bytes."""
+    from irkit_spark.functions.codecs import encode_blocks
+    from irkit_spark.functions.scoring import bm25_tf_norm
+    from irkit_spark.operators.query import _decode_row_blocks
+    docs = idx.docs.select("doc_id", "doc_len").toPandas()
+    dl = np.zeros(int(docs["doc_id"].max()) + 1, dtype=np.float64)
+    dl[docs["doc_id"].to_numpy()] = docs["doc_len"].to_numpy()
+    f32 = lambda x: float(np.float32(x))
+    rows = idx.postings.collect()
+    assert rows
+    for r in rows:
+        d, tf = _decode_row_blocks(r["blocks"], idx.codec)
+        ref = encode_blocks(d, tf, bm25_tf_norm(tf, dl[d.astype(np.int64)],
+                                                idx.avgdl),
+                            idx.block_size, idx.codec)
+        got = [(b["first_doc"], b["last_doc"], b["n"], b["max_score"],
+                bytes(b["doc_bytes"]), bytes(b["tf_bytes"]))
+               for b in r["blocks"]]
+        want = [(b["first_doc"], b["last_doc"], b["n"],
+                 f32(b["max_score"]), b["doc_bytes"], b["tf_bytes"])
+                for b in ref]
+        key = (r["term_id"], r["partition_id"])
+        assert got == want, key
+        assert (r["n_docs"], r["cf"], r["max_norm"], r["wire_bytes"]) == (
+            d.size, int(tf.sum()), f32(max(b["max_score"] for b in ref)),
+            sum(len(b["doc_bytes"]) + len(b["tf_bytes"]) for b in ref)), key
+
+
 def test_streamvbyte_build_parity(spark, pages_small, index_small,
                                   tmp_path):
-    """Full build through the generic (pandas) encode kernel with the
-    streamvbyte codec: decoded postings and search results must equal
-    the varbyte index's exactly."""
+    """Full build with the streamvbyte codec: decoded postings and
+    search results must equal the varbyte index's exactly, and every
+    row equals the reference block encoder's output."""
     from irkit_spark.functions.codecs import CODECS, delta_decode
     from irkit_spark.operators.build import build_index
     from irkit_spark.operators.query import Index, search
@@ -156,13 +188,15 @@ def test_streamvbyte_build_parity(spark, pages_small, index_small,
         return out
 
     assert decoded(svb) == decoded(vb_idx)
+    _assert_rows_match_reference(svb)
 
 
 def test_binpack_build_parity(spark, pages_small, index_small,
                               tmp_path):
     """Full build with the binpack (bit-packing) codec: search results
-    and decoded postings equal the varbyte index's exactly, and the
-    fixed-width gap packing beats LEB128's 1-byte floor on the wire."""
+    and decoded postings equal the varbyte index's exactly, every row
+    equals the reference block encoder's output, and the fixed-width
+    gap packing beats LEB128's 1-byte floor on the wire."""
     from irkit_spark.operators.build import build_index
     from irkit_spark.operators.query import Index, search
     out = str(tmp_path / "bp")
@@ -187,6 +221,7 @@ def test_binpack_build_parity(spark, pages_small, index_small,
         len(bytes(b["doc_bytes"])) + len(bytes(b["tf_bytes"]))
         for r in bp.postings.collect() for b in r["blocks"])
     assert bp_bytes < vb_bytes
+    _assert_rows_match_reference(bp)
 
 
 def test_vocab_gate_paths_byte_identical(spark, pages_small,

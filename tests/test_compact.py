@@ -159,3 +159,23 @@ def test_compact_guards(spark, tmp_path):
         compact_index(spark, a, str(tmp_path / "qout"))
     with pytest.raises(ValueError, match="differ"):
         compact_index(spark, a, a)
+
+
+@pytest.mark.parametrize("codec", ["varbyte", "streamvbyte"])
+def test_encode_sizing_knobs_keep_postings_bytes(spark, tmp_path,
+                                                 monkeypatch, codec):
+    """ENC_BUCKET_OVER / ENC_PART_BYTES only size the encode exchange.
+    One pack-time bucket per shuffle partition plus a tiny packed-byte
+    budget per encode partition (which drives n_parts_enc to the bucket
+    cap) must write the same postings bytes as the defaults."""
+    from irkit_spark import config
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    kw = dict(docs_per_shard=25, doc_id_col="doc_id", key_col="doc_id",
+              n_parts=4, codec=codec)
+    ref, forced = str(tmp_path / "ref"), str(tmp_path / "forced")
+    build_index(spark, df, ref, **kw)
+    monkeypatch.setattr(config, "ENC_BUCKET_OVER", 1)
+    monkeypatch.setattr(config, "ENC_PART_BYTES", 64)
+    build_index(spark, df, forced, **kw)
+    got = _postings_by_term(spark, forced)
+    assert got == _postings_by_term(spark, ref) and got

@@ -7,9 +7,11 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from irkit_spark.functions.codecs import CODECS
 from irkit_spark.operators.build import build_index
 from irkit_spark.operators.merge import merge_indexes
 from irkit_spark.operators.query import Index, search
@@ -31,34 +33,65 @@ def _postings_canon(spark, path):
     return out
 
 
-@pytest.fixture(scope="module")
-def split_build(spark, pages_small, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("merge"))
-    ids = assign_dense_ids(pages_small, "url", "doc_id", 64).cache()
-    n_docs = ids.count()
-    dl = None
+def _postings_rows(spark, path):
+    """Every postings row, exact: (term_id, shard) -> (n_docs, cf,
+    max_norm, wire_bytes, blocks) with float32 scores as stored."""
+    out = {}
+    for r in spark.read.parquet(os.path.join(path, "postings")).collect():
+        key = (r["term_id"], r["partition_id"])
+        assert key not in out
+        out[key] = (r["n_docs"], r["cf"], r["max_norm"], r["wire_bytes"],
+                    tuple((b["first_doc"], b["last_doc"], b["n"],
+                           b["max_score"], bytes(b["doc_bytes"]),
+                           bytes(b["tf_bytes"])) for b in r["blocks"]))
+    return out
 
-    # single-shot reference build
+
+def _split_build(spark, ids, base, **build_kw):
+    """A single-shot build of `ids` and an odd/even two-batch build of
+    the same docs merged back together (shards overlap across batches,
+    so most (term, shard) rows are re-encoded by the merge). Returns
+    (full_dir, merged_dir, batch_dirs)."""
+    n_docs = ids.count()
     full_dir = os.path.join(base, "full")
     build_index(spark, ids, full_dir, docs_per_shard=300,
-                doc_id_col="doc_id")
+                doc_id_col="doc_id", **build_kw)
     full_idx = Index(spark, full_dir)
     lexicon = full_idx.terms.select("term", "term_id")
     stats = (n_docs, full_idx.avgdl)
-
-    # two batches: odd/even doc ids (shards overlap across batches!)
     dirs = []
     for name, pred in [("even", F.col("doc_id") % 2 == 0),
                        ("odd", F.col("doc_id") % 2 == 1)]:
         d = os.path.join(base, name)
         build_index(spark, ids.filter(pred), d, docs_per_shard=300,
                     doc_id_col="doc_id", shared_lexicon=lexicon,
-                    global_stats=stats)
+                    global_stats=stats, **build_kw)
         dirs.append(d)
-
     merged_dir = os.path.join(base, "merged")
     merge_indexes(spark, dirs, merged_dir)
-    return full_dir, merged_dir, ids
+    return full_dir, merged_dir, dirs
+
+
+@pytest.fixture(scope="module")
+def dense_pages(pages_small):
+    return assign_dense_ids(pages_small, "url", "doc_id", 64).cache()
+
+
+@pytest.fixture(scope="module")
+def split_build(spark, dense_pages, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("merge"))
+    full_dir, merged_dir, _ = _split_build(spark, dense_pages, base)
+    return full_dir, merged_dir, dense_pages
+
+
+@pytest.fixture(scope="module", params=["streamvbyte", "quantized"])
+def split_build_variant(request, spark, dense_pages, tmp_path_factory):
+    """The split build again, with a non-varbyte codec and with a
+    quantized varbyte build (the varbyte case is `split_build`)."""
+    base = str(tmp_path_factory.mktemp("merge_" + request.param))
+    kw = ({"quantize": True} if request.param == "quantized"
+          else {"codec": request.param})
+    return request.param, _split_build(spark, dense_pages, base, **kw)
 
 
 def test_merge_equals_single_shot(spark, split_build):
@@ -66,6 +99,41 @@ def test_merge_equals_single_shot(spark, split_build):
     a = _postings_canon(spark, full_dir)
     b = _postings_canon(spark, merged_dir)
     assert a == b                     # byte-identical postings content
+
+
+def test_merge_variant_postings_pinned(spark, split_build_variant):
+    """Merged postings against the single-shot build, every field.
+    streamvbyte: equal on every row. Quantized: the payload is the
+    7-bit impact, so every row keeps the single-shot bytes, n_docs, cf
+    and wire size; a row present in one batch only passes through
+    untouched, while a re-encoded row stores block max_score =
+    max(q)/127 (a sound bound: never above the exact tf_norm max)."""
+    variant, (full_dir, merged_dir, dirs) = split_build_variant
+    full = _postings_rows(spark, full_dir)
+    merged = _postings_rows(spark, merged_dir)
+    assert merged.keys() == full.keys() and full
+    if variant != "quantized":
+        assert merged == full
+        return
+    even, odd = (set(_postings_rows(spark, d)) for d in dirs)
+    codec_dec = CODECS["varbyte"][1]
+    n_reencoded = n_lowered = 0
+    for key, (n, cf, mx, wire, blocks) in merged.items():
+        fn, fcf, fmx, fwire, fblocks = full[key]
+        if (key in even) != (key in odd):       # single-source row
+            assert (n, cf, mx, wire, blocks) == full[key], key
+            continue
+        n_reencoded += 1
+        assert (n, cf, wire) == (fn, fcf, fwire), key
+        assert len(blocks) == len(fblocks)
+        for b, fb in zip(blocks, fblocks):
+            assert b[:3] == fb[:3] and b[4:] == fb[4:], key
+            q = codec_dec(b[5], b[2])
+            assert b[3] == float(np.float32(q.max() / 127.0)), key
+            assert b[3] <= fb[3]
+            n_lowered += b[3] != fb[3]
+        assert mx == max(b[3] for b in blocks)
+    assert n_reencoded and n_lowered
 
 
 def test_merge_terms_and_stats(spark, split_build):
