@@ -68,8 +68,8 @@ def varbyte_encode(values: np.ndarray, nbytes: np.ndarray | None = None) -> byte
 def varbyte_byte_offsets(values: np.ndarray) -> np.ndarray:
     """Exclusive prefix sum of per-value encoded byte counts (len n+1):
     lets a caller varbyte-encode one big array ONCE and slice any
-    contiguous value range out of the wire bytes — the batch-vectorized
-    block framing fast path (operators/build._encode_kernel)."""
+    contiguous value range out of the wire bytes (the positions writer,
+    operators/positions, slices its per-group streams this way)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     off = np.zeros(v.size + 1, dtype=np.int64)
     if v.size:
@@ -204,6 +204,9 @@ def encode_blocks(doc_ids: np.ndarray, tfs: np.ndarray, tf_norms: np.ndarray,
                   block_size: int, codec: str):
     """Split one posting run (docIDs strictly increasing) into blocks.
 
+    Reference implementation of the block format: the index writers all
+    go through operators/build.encode_region, which must produce the
+    same bytes (tests/test_build.py checks whole indexes against this).
     Returns a list of dicts matching FIXTURES.md F5 `blocks` struct:
     (first_doc, last_doc, n, max_score, doc_bytes, tf_bytes).
     `max_score` stores the block's max *idf-free* BM25 term factor
@@ -251,7 +254,10 @@ def decode_blocks_batch(blocks, codec: str):
     Requires blocks in ascending doc order with disjoint ranges — the
     build invariant (one postings row per (term_id, shard), blocks
     emitted in (doc_id) order by the streaming group merger) that the
-    query kernel's block-range searchsorted already relies on.
+    query kernel's block-range searchsorted already relies on. Several
+    runs may also be passed back to back (operators/merge._decode_shard
+    decodes a whole shard so): the splice is int64, so the step back
+    to the next run's first_doc decodes exactly too.
 
     Returns (docs u64[], tfs u64[], offsets i64[m+1]): block j's
     postings occupy [offsets[j]:offsets[j+1]].

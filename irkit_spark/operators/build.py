@@ -29,10 +29,10 @@ persisted canonical output:
                 thousand binary cells instead of 10^12 Tungsten rows
                 (row ser/deser + row->Arrow measured 2x the encode
                 kernel in JVM CPU); the within-partition sort runs as
-                one packed-key argsort inside the varbyte encode
-                kernel, one bucket at a time (bounded expansion)
-    -> encode:  streaming-group kernel: delta-gap + varbyte/streamvbyte
-                blocks + per-block max tf_norm + per-group cf
+                one packed-key argsort inside the encode kernel, one
+                bucket at a time (bounded expansion), for every codec
+    -> encode:  encode_region, the one postings writer: delta-gap +
+                codec blocks + per-block max tf_norm + per-group cf
                                                              (C1-C4/A5/A2)
     -> write:   postings (dir-partitioned by shard), terms (df/cf/
                 max_score from ONE postings scan), docs (dl from the
@@ -64,11 +64,13 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irkit_spark import config
-from irkit_spark.functions.codecs import encode_blocks
+from irkit_spark.functions.codecs import CODECS, _vb_nbytes, varbyte_encode
+from irkit_spark.functions.scoring import bm25_tf_norm
 from irkit_spark.functions.tokenize import (canonicalize_iter,
                                             tokenize_count_iter,
                                             tokenize_ids_iter)
@@ -77,9 +79,9 @@ from irkit_spark.plans.dense_ids import dense_id_mapping, sorted_rank_mapping
 TOK_SCHEMA = "doc_id long, term string, tf long, dl long"
 
 # Arrow binary arrays carry int32 offsets: one encode_region call whose
-# varbyte wire stream exceeds this silently overflows and corrupts
-# postings. Regions are split at (term_id, shard) group boundaries
-# before encoding when either stream would cross it (patchable in tests).
+# wire stream exceeds this silently overflows and corrupts postings.
+# Regions are split at (term_id, shard) group boundaries before
+# encoding when either stream would cross it (patchable in tests).
 MAX_BIN_OFFSET = (1 << 31) - 16
 # cf = sum of raw tf over the (term, shard) group, aggregated inside
 # the encode kernel: stage 4's df/cf then come from the tiny postings
@@ -94,13 +96,146 @@ POSTINGS_SCHEMA = (
     "max_norm float, wire_bytes long, "
     "blocks array<struct<first_doc: long, last_doc: long, n: int, "
     "max_score: float, doc_bytes: binary, tf_bytes: binary>>")
+POSTINGS_ARROW = pa.schema([
+    ("term_id", pa.int32()), ("partition_id", pa.int32()),
+    ("n_docs", pa.int32()), ("cf", pa.int64()),
+    ("max_norm", pa.float32()), ("wire_bytes", pa.int64()),
+    ("blocks", pa.list_(pa.struct([
+        ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+        ("n", pa.int32()), ("max_score", pa.float32()),
+        ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary())]))),
+])
 
 # Explicit artifact-reader schemas: skips footer-based inference AND
 # keeps empty builds loadable (a partitionBy write of zero rows leaves
 # a dir with no data files, which schema inference cannot read)
-TOK_TABLE_SCHEMA = "doc_id long, term_id int, tf int, dl int"
 DOCS_TABLE_SCHEMA = "doc_id long, url string, doc_len int, partition_id int"
 TERMS_TABLE_SCHEMA = "term_id int, term string, df long, cf long, max_score float"
+
+
+def _byte_offsets(sizes) -> np.ndarray:
+    """Exclusive prefix sum (len n+1) of per-item byte sizes."""
+    off = np.zeros(len(sizes) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=off[1:])
+    return off
+
+
+def encode_region(t, s, d, payload, tf_norm, tf=None, *, codec: str,
+                  block_size: int):
+    """Encode postings sorted by (term_id, shard, doc_id) into
+    POSTINGS_ARROW record batches — the one postings writer of the
+    build, the merge and the compaction.
+
+    One row per (term_id, shard) group; the group is cut into blocks of
+    `block_size` postings, each storing its doc-id gaps (first gap 0,
+    relative to first_doc) and its `payload` values (the raw tf, or the
+    7-bit impact of a quantized index) in `codec`, plus max_score = the
+    block max of `tf_norm` (the idf-free BM25 factor). Row cf sums `tf`
+    (default: the payload). Varbyte encodes each stream of the region
+    ONCE and slices blocks out by byte offset; the other codecs make one
+    call per block. Either way the blocks column is assembled from flat
+    buffers, with no per-block dicts.
+
+    Arrow binary arrays carry int32 offsets, so a region whose stream
+    would pass MAX_BIN_OFFSET is split at a group boundary near the
+    middle and encoded in halves (group spans stay intact, so output
+    rows stay unique per (term_id, partition_id)); more than one batch
+    is yielded only then."""
+    n = d.size
+    if tf is None:
+        tf = payload
+    gflag = np.empty(n, dtype=bool)
+    gflag[0] = True
+    gflag[1:] = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
+    gstarts = np.flatnonzero(gflag)
+    pos = np.arange(n, dtype=np.int64) - gstarts[np.cumsum(gflag) - 1]
+    bstarts = np.flatnonzero(gflag | (pos % block_size == 0))
+    bounds = np.append(bstarts, n)
+    gaps = np.empty(n, dtype=np.uint64)
+    gaps[0] = 0
+    gaps[1:] = (d[1:] - d[:-1]).view(np.uint64)
+    gaps[bstarts] = 0   # overwrites cross-group negatives too
+    # block byte offsets are known before the wire bytes are joined, so
+    # an oversized region splits before its streams are materialized
+    if codec == "varbyte":
+        nb_d, nb_t = _vb_nbytes(gaps), _vb_nbytes(payload)
+        off_d = _byte_offsets(nb_d)[bounds]
+        off_t = _byte_offsets(nb_t)[bounds]
+    else:
+        enc = CODECS[codec][0]
+        blk_d = [enc(gaps[a:z]) for a, z in zip(bounds[:-1], bounds[1:])]
+        blk_t = [enc(payload[a:z]) for a, z in zip(bounds[:-1], bounds[1:])]
+        off_d = _byte_offsets([len(x) for x in blk_d])
+        off_t = _byte_offsets([len(x) for x in blk_t])
+    if max(off_d[-1], off_t[-1]) > MAX_BIN_OFFSET:
+        if gstarts.size < 2:
+            raise ValueError(
+                "single (term_id, shard) group exceeds the 2GB Arrow "
+                "binary limit — lower DOCS_PER_SHARD")
+        i = min(max(int(np.searchsorted(gstarts, n // 2)), 1),
+                gstarts.size - 1)
+        for part in (slice(0, gstarts[i]), slice(gstarts[i], n)):
+            yield from encode_region(
+                t[part], s[part], d[part], payload[part], tf_norm[part],
+                tf[part], codec=codec, block_size=block_size)
+        return
+    if codec == "varbyte":
+        wire_d = varbyte_encode(gaps, nb_d)
+        wire_t = varbyte_encode(payload, nb_t)
+    else:
+        wire_d, wire_t = b"".join(blk_d), b"".join(blk_t)
+    nblocks = bstarts.size
+    bmax = np.maximum.reduceat(tf_norm, bstarts)
+    struct = pa.StructArray.from_arrays(
+        [pa.array(d[bstarts], pa.int64()),
+         pa.array(d[bounds[1:] - 1], pa.int64()),
+         pa.array(np.diff(bounds).astype(np.int32), pa.int32()),
+         pa.array(bmax.astype(np.float32), pa.float32()),
+         pa.Array.from_buffers(pa.binary(), nblocks,
+                               [None, pa.py_buffer(off_d.astype(np.int32)),
+                                pa.py_buffer(wire_d)]),
+         pa.Array.from_buffers(pa.binary(), nblocks,
+                               [None, pa.py_buffer(off_t.astype(np.int32)),
+                                pa.py_buffer(wire_t)])],
+        names=["first_doc", "last_doc", "n", "max_score",
+               "doc_bytes", "tf_bytes"])
+    # each group's blocks: from its first block to the next group's
+    gb = np.append(np.flatnonzero(gflag[bstarts]), nblocks)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(t[gstarts].astype(np.int32), pa.int32()),
+         pa.array(s[gstarts].astype(np.int32), pa.int32()),
+         pa.array(np.diff(np.append(gstarts, n)).astype(np.int32),
+                  pa.int32()),
+         pa.array(np.add.reduceat(tf.astype(np.int64), gstarts), pa.int64()),
+         pa.array(np.maximum.reduceat(bmax, gb[:-1]).astype(np.float32),
+                  pa.float32()),
+         pa.array(np.diff(off_d[gb]) + np.diff(off_t[gb]), pa.int64()),
+         pa.ListArray.from_arrays(pa.array(gb.astype(np.int32), pa.int32()),
+                                  struct)],
+        schema=POSTINGS_ARROW)
+
+
+def encode_postings(t, d, payload, tf_norm, tf=None, *, codec: str,
+                    block_size: int, docs_per_shard: int):
+    """encode_region over postings in any order ((term_id, doc_id) pairs
+    unique). Ordering by (term, doc) IS the (term, shard, doc) order —
+    shard = doc // docs_per_shard is monotonic in doc."""
+    if not d.size:
+        return
+    d_bits = max(1, int(d.max())).bit_length()
+    if int(t.max()).bit_length() + d_bits <= 63:
+        # keys are unique, so the unstable introsort is safe — and ~2x
+        # faster than the stable mergesort for int64; at 10^12 docs x
+        # 10^8 vocab the key does not fit and the 2-key lexsort runs
+        order = np.argsort((t.astype(np.int64) << d_bits) | d)
+    else:
+        order = np.lexsort((d, t))
+    d = d[order]
+    yield from encode_region(
+        t[order], (d // docs_per_shard).astype(np.int32), d,
+        payload[order], tf_norm[order],
+        None if tf is None else tf[order],
+        codec=codec, block_size=block_size)
 
 
 def tokenize_spark(df: DataFrame, id_col: str = "doc_id",
@@ -111,137 +246,6 @@ def tokenize_spark(df: DataFrame, id_col: str = "doc_id",
     return src.mapInPandas(
         lambda it: tokenize_count_iter(it, "doc_id", "text"),
         schema=TOK_SCHEMA)
-
-
-def _encode_kernel(avgdl: float, codec: str, block_size: int,
-                   docs_per_shard: int, quantize: bool = False):
-    """mapInPandas encoder: streaming (term_id, shard) group merger.
-
-    Input batches arrive sorted by (term_id, shard, doc_id) within the
-    Spark partition; a group may span Arrow batches, so the last
-    (possibly incomplete) group of each batch is carried into the next.
-    """
-    k1, b = config.BM25_K1, config.BM25_B
-
-    def run(batches):
-        carry = None
-
-        def encode_region(pdf: pd.DataFrame):
-            from irkit_spark.functions.codecs import (varbyte_byte_offsets,
-                                                      varbyte_encode)
-            t = pdf["term_id"].to_numpy()
-            s = pdf["shard"].to_numpy()
-            d = pdf["doc_id"].to_numpy().astype(np.int64)
-            tf = pdf["tf"].to_numpy().astype(np.uint64)
-            dl = pdf["dl"].to_numpy().astype(np.float64)
-            n = d.size
-            tf_norm = tf.astype(np.float64) / (
-                tf + k1 * (1.0 - b + b * dl / avgdl))
-            # group starts where (term_id, shard) changes
-            gflag = np.empty(n, dtype=bool)
-            gflag[0] = True
-            gflag[1:] = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-            gid = np.cumsum(gflag) - 1
-            gstarts = np.flatnonzero(gflag)
-            pos = np.arange(n, dtype=np.int64) - gstarts[gid]
-            # block starts: every block_size-th posting within a group
-            bflag = gflag | (pos % block_size == 0)
-            bstarts = np.flatnonzero(bflag)
-            bends = np.append(bstarts[1:], n)
-            # delta-gaps, reset at each block start (first gap 0 vs
-            # first_doc) — whole-batch, no per-group work
-            gaps = np.empty(n, dtype=np.uint64)
-            gaps[0] = 0
-            gaps[1:] = (d[1:] - d[:-1]).view(np.uint64)
-            gaps[bstarts] = 0   # overwrites cross-group negatives too
-            cf_g = np.add.reduceat(tf.astype(np.int64), gstarts)
-            if quantize:
-                # precomputed 7-bit impact scores (irkit quantize.hpp,
-                # SURVEY.md §2.8): 0..127 = exactly one varbyte byte
-                # per posting; FLOOR so q/127 <= tf_norm and the
-                # exact per-block max_score stays a sound WAND bound
-                tf = np.floor(tf_norm * 127.0).astype(np.uint64)
-            if codec == "varbyte":
-                # encode the WHOLE batch once; slice per block by offsets
-                wire_d = varbyte_encode(gaps)
-                off_d = varbyte_byte_offsets(gaps)
-                wire_t = varbyte_encode(tf)
-                off_t = varbyte_byte_offsets(tf)
-                bmax = np.maximum.reduceat(tf_norm, bstarts)
-                firsts = d[bstarts]
-                lasts = d[bends - 1]
-                blk_of_grp = gid[bstarts]
-                blocks_all = [
-                    {"first_doc": int(firsts[i]), "last_doc": int(lasts[i]),
-                     "n": int(bends[i] - bstarts[i]),
-                     "max_score": float(bmax[i]),
-                     "doc_bytes": wire_d[off_d[bstarts[i]]:off_d[bends[i]]],
-                     "tf_bytes": wire_t[off_t[bstarts[i]]:off_t[bends[i]]]}
-                    for i in range(bstarts.size)]
-                # group blocks into per-(term,shard) rows
-                gb_starts = np.flatnonzero(
-                    np.diff(blk_of_grp, prepend=blk_of_grp[0] - 1))
-                gb_ends = np.append(gb_starts[1:], bstarts.size)
-                gends = np.append(gstarts[1:], n)
-                return pd.DataFrame({
-                    "term_id": t[gstarts].astype("int32"),
-                    "partition_id": s[gstarts].astype("int32"),
-                    "n_docs": (gends - gstarts).astype("int32"),
-                    "cf": cf_g.astype("int64"),
-                    "max_norm": np.maximum.reduceat(bmax, gb_starts)
-                    .astype("float32"),
-                    "wire_bytes": ((off_d[gends] - off_d[gstarts])
-                                   + (off_t[gends] - off_t[gstarts]))
-                    .astype("int64"),
-                    "blocks": [blocks_all[a:b]
-                               for a, b in zip(gb_starts, gb_ends)],
-                })
-            # generic per-group path (streamvbyte etc.)
-            gends = np.append(gstarts[1:], n)
-            rows = {"term_id": [], "partition_id": [], "n_docs": [],
-                    "cf": [], "max_norm": [], "wire_bytes": [],
-                    "blocks": []}
-            du = d.astype(np.uint64)
-            for gi, (g0, g1) in enumerate(zip(gstarts, gends)):
-                blks = encode_blocks(du[g0:g1], tf[g0:g1],
-                                     tf_norm[g0:g1], block_size, codec)
-                rows["term_id"].append(int(t[g0]))
-                rows["partition_id"].append(int(s[g0]))
-                rows["n_docs"].append(int(g1 - g0))
-                rows["cf"].append(int(cf_g[gi]))
-                rows["max_norm"].append(
-                    max(b["max_score"] for b in blks))
-                rows["wire_bytes"].append(
-                    sum(len(b["doc_bytes"]) + len(b["tf_bytes"])
-                        for b in blks))
-                rows["blocks"].append(blks)
-            return pd.DataFrame(rows)
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if "shard" not in pdf.columns:
-                pdf = pdf.assign(
-                    shard=(pdf["doc_id"].to_numpy() // docs_per_shard)
-                    .astype(np.int32))
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            t = pdf["term_id"].to_numpy()
-            s = pdf["shard"].to_numpy()
-            # split off the trailing (possibly incomplete) group
-            last_t, last_s = t[-1], s[-1]
-            in_last = (t == last_t) & (s == last_s)
-            # find start of trailing run
-            nz = np.flatnonzero(~in_last)
-            cut = (nz[-1] + 1) if nz.size else 0
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            head = pdf.iloc[:cut]
-            if len(head):
-                yield encode_region(head)
-        if carry is not None and len(carry):
-            yield encode_region(carry)
-
-    return run
 
 
 # packed token-blob layout (the build's big exchange moves these
@@ -340,7 +344,6 @@ def _pack_tok_pandas(pdfs, n_buckets: int, docs_per_shard: int):
 def _pack_kernel_arrow(n_buckets: int, docs_per_shard: int):
     """mapInArrow: (doc_id, term_id, tf, dl) rows -> packed blob rows
     (the huge-vocab path packs after its term-id shuffle join)."""
-    import pyarrow as pa
 
     def run(batches):
         for rb in batches:
@@ -361,201 +364,16 @@ def _pack_kernel_arrow(n_buckets: int, docs_per_shard: int):
     return run
 
 
-def _unpack_rows_kernel():
-    """mapInArrow: packed blob rows -> (doc_id, term_id, tf, dl) rows
-    (generic-codec path; varbyte never unpacks to Spark rows)."""
-    import pyarrow as pa
+def _blob_encoder(avgdl: float, codec: str, block_size: int,
+                  docs_per_shard: int, quantize: bool = False):
+    """mapInArrow encoder over packed-blob rows (TOK_BLOB_SCHEMA).
+
+    Raw blobs are accumulated per bucket (20B/posting — the partition is
+    resident only in packed form), then ONE bucket at a time is
+    expanded, scored, sorted and encoded, so peak numpy expansion is a
+    bucket, not the partition."""
 
     def run(batches):
-        for rb in batches:
-            cells = _binary_cells(rb.column(rb.schema.names.index("blob")))
-            for i in range(rb.num_rows):
-                d, t, tf, dl = _unpack_blob(cells[i])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(d, pa.int64()), pa.array(t, pa.int32()),
-                     pa.array(tf, pa.int32()), pa.array(dl, pa.int32())],
-                    names=["doc_id", "term_id", "tf", "dl"])
-
-    return run
-
-
-def _encode_kernel_arrow(avgdl: float, block_size: int,
-                         docs_per_shard: int, quantize: bool = False,
-                         sort_in_kernel: bool = True,
-                         max_bin_offset: int | None = None,
-                         blob_input: bool = False):
-    """mapInArrow encoder (varbyte fast path): the blocks column is
-    assembled as a pyarrow List<Struct> directly from numpy buffers —
-    no per-block Python dicts, no pandas round-trip. Per 30M postings
-    that removes ~0.5M python object allocations from the hot path.
-
-    Same streaming (term_id, shard) group-carry protocol as the pandas
-    kernel; wire bytes per block are contiguous slices of the one
-    whole-batch varbyte stream, so the Arrow BinaryArray is built from
-    the stream buffer + per-block offsets with zero copies.
-    """
-    import pyarrow as pa
-
-    from irkit_spark.functions.codecs import (varbyte_byte_offsets,
-                                              varbyte_encode)
-
-    k1, b = config.BM25_K1, config.BM25_B
-    bin_limit = max_bin_offset if max_bin_offset is not None \
-        else MAX_BIN_OFFSET
-    out_schema = pa.schema([
-        ("term_id", pa.int32()),
-        ("partition_id", pa.int32()),
-        ("n_docs", pa.int32()),
-        ("cf", pa.int64()),
-        ("max_norm", pa.float32()),
-        ("wire_bytes", pa.int64()),
-        ("blocks", pa.list_(pa.struct([
-            ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-            ("n", pa.int32()), ("max_score", pa.float32()),
-            ("doc_bytes", pa.binary()), ("tf_bytes", pa.binary())]))),
-    ])
-
-    def encode_region(t, s, d, tf, dl):
-        n = d.size
-        tf_in = tf                      # pre-quantize, for split recursion
-        tf_norm = tf.astype(np.float64) / (
-            tf + k1 * (1.0 - b + b * dl / avgdl))
-        gflag = np.empty(n, dtype=bool)
-        gflag[0] = True
-        gflag[1:] = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-        gid = np.cumsum(gflag) - 1
-        gstarts = np.flatnonzero(gflag)
-        pos = np.arange(n, dtype=np.int64) - gstarts[gid]
-        bflag = gflag | (pos % block_size == 0)
-        bstarts = np.flatnonzero(bflag)
-        bends = np.append(bstarts[1:], n)
-        gaps = np.empty(n, dtype=np.uint64)
-        gaps[0] = 0
-        gaps[1:] = (d[1:] - d[:-1]).view(np.uint64)
-        gaps[bstarts] = 0
-        cf_g = np.add.reduceat(tf_in.astype(np.int64), gstarts)
-        if quantize:
-            tf = np.floor(tf_norm * 127.0).astype(np.uint64)
-        # offsets are exact wire sizes, computable before encoding: if
-        # either stream would overflow the int32 Arrow binary offsets,
-        # split the region at a group boundary near the middle and
-        # recurse (group spans stay intact, so output rows stay unique
-        # per (term_id, partition_id))
-        from irkit_spark.functions.codecs import _vb_nbytes
-        nb_d, nb_t = _vb_nbytes(gaps), _vb_nbytes(tf)
-        off_d = np.zeros(n + 1, dtype=np.int64)
-        off_t = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(nb_d, out=off_d[1:])
-        np.cumsum(nb_t, out=off_t[1:])
-        if int(off_d[-1]) > bin_limit or int(off_t[-1]) > bin_limit:
-            if gstarts.size < 2:
-                raise ValueError(
-                    "single (term_id, shard) group exceeds the 2GB Arrow "
-                    "binary limit — lower DOCS_PER_SHARD")
-            i = np.searchsorted(gstarts, n // 2)
-            i = min(max(i, 1), gstarts.size - 1)
-            cut = int(gstarts[i])
-            for lo, hi in ((0, cut), (cut, n)):
-                yield from encode_region(t[lo:hi], s[lo:hi], d[lo:hi],
-                                         tf_in[lo:hi], dl[lo:hi])
-            return
-        wire_d = np.frombuffer(varbyte_encode(gaps, nb_d), dtype=np.uint8)
-        wire_t = np.frombuffer(varbyte_encode(tf, nb_t), dtype=np.uint8)
-        bmax = np.maximum.reduceat(tf_norm, bstarts)
-        nblocks = bstarts.size
-        bin_off_d = off_d[np.append(bstarts, n)].astype(np.int32)
-        bin_off_t = off_t[np.append(bstarts, n)].astype(np.int32)
-        doc_bin = pa.Array.from_buffers(
-            pa.binary(), nblocks,
-            [None, pa.py_buffer(bin_off_d), pa.py_buffer(wire_d)])
-        tf_bin = pa.Array.from_buffers(
-            pa.binary(), nblocks,
-            [None, pa.py_buffer(bin_off_t), pa.py_buffer(wire_t)])
-        struct = pa.StructArray.from_arrays(
-            [pa.array(d[bstarts], pa.int64()),
-             pa.array(d[bends - 1], pa.int64()),
-             pa.array((bends - bstarts).astype(np.int32), pa.int32()),
-             pa.array(bmax.astype(np.float32), pa.float32()),
-             doc_bin, tf_bin],
-            names=["first_doc", "last_doc", "n", "max_score",
-                   "doc_bytes", "tf_bytes"])
-        blk_of_grp = gid[bstarts]
-        gb_starts = np.flatnonzero(
-            np.diff(blk_of_grp, prepend=blk_of_grp[0] - 1))
-        list_offsets = np.append(gb_starts, nblocks).astype(np.int32)
-        blocks_col = pa.ListArray.from_arrays(
-            pa.array(list_offsets, pa.int32()), struct)
-        gends = np.append(gstarts[1:], n)
-        max_norm_g = np.maximum.reduceat(bmax, gb_starts)
-        wire_g = ((off_d[gends] - off_d[gstarts])
-                  + (off_t[gends] - off_t[gstarts]))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(t[gstarts].astype(np.int32), pa.int32()),
-             pa.array(s[gstarts].astype(np.int32), pa.int32()),
-             pa.array((gends - gstarts).astype(np.int32), pa.int32()),
-             pa.array(cf_g.astype(np.int64), pa.int64()),
-             pa.array(max_norm_g.astype(np.float32), pa.float32()),
-             pa.array(wire_g.astype(np.int64), pa.int64()),
-             blocks_col], schema=out_schema)
-
-    def cols(rb_or_tbl, want_shard: bool = True):
-        # shard is DERIVED from doc_id here rather than shuffled as a
-        # column: 4 fewer bytes per token row through the big exchange
-        names = rb_or_tbl.schema.names
-        get = lambda c: rb_or_tbl.column(names.index(c)).to_numpy(
-            zero_copy_only=False)
-        d = get("doc_id").astype(np.int64)
-        s = (d // docs_per_shard).astype(np.int32) if want_shard else None
-        return (get("term_id"), s, d, get("tf").astype(np.uint64),
-                get("dl").astype(np.float64))
-
-    def run_presorted(batches):
-        """Input already sorted by (term_id, shard, doc_id) (Tungsten
-        sortWithinPartitions): streaming group-carry across batches."""
-        carry = None   # tuple of numpy arrays (t, s, d, tf, dl)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            arrs = cols(rb)
-            if carry is not None:
-                arrs = tuple(np.concatenate([c, a])
-                             for c, a in zip(carry, arrs))
-            t, s = arrs[0], arrs[1]
-            last_t, last_s = t[-1], s[-1]
-            in_last = (t == last_t) & (s == last_s)
-            nz = np.flatnonzero(~in_last)
-            cut = (nz[-1] + 1) if nz.size else 0
-            carry = tuple(a[cut:] for a in arrs)
-            if cut:
-                yield from encode_region(*(a[:cut] for a in arrs))
-        if carry is not None and carry[0].size:
-            yield from encode_region(*carry)
-
-    def sort_and_encode(t, d, tf, dl):
-        """Shared tail of the in-kernel-sort paths: order by (term,
-        doc) — shard = doc // DPS is monotonic in doc, so this IS the
-        (term, shard, doc) order — then encode."""
-        t_max = int(t.max()) if t.size else 0
-        d_max = int(d.max()) if d.size else 0
-        d_bits = max(1, d_max).bit_length()
-        if t_max.bit_length() + d_bits <= 63:
-            # keys are unique ((term, doc) appears once: tf is already
-            # aggregated), so unstable introsort is safe — and ~2x
-            # faster than the stable mergesort for int64
-            key = (t.astype(np.int64) << d_bits) | d
-            order = np.argsort(key)
-            del key
-        else:
-            order = np.lexsort((d, t))
-        d = d[order]
-        s = (d // docs_per_shard).astype(np.int32)
-        yield from encode_region(t[order], s, d, tf[order], dl[order])
-
-    def run_blobs(batches):
-        """Packed-blob input (TOK_BLOB_SCHEMA): accumulate raw blobs
-        per bucket (20B/posting — the partition is resident only in
-        packed form), then expand + sort + encode ONE bucket at a time,
-        so peak numpy expansion is a bucket, not the partition."""
         per_bucket: dict[int, list] = {}
         for rb in batches:
             names = rb.schema.names
@@ -565,40 +383,23 @@ def _encode_kernel_arrow(avgdl: float, block_size: int,
                 per_bucket.setdefault(int(bks[i]), []).append(cell)
         for bucket in sorted(per_bucket):
             parts = [_unpack_blob(b) for b in per_bucket[bucket]]
-            t = np.concatenate([p[1] for p in parts])
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[2] for p in parts]).astype(np.uint64)
-            dl = np.concatenate([p[3] for p in parts]).astype(np.float64)
             per_bucket[bucket] = None
+            d, t, tf, dl = (np.concatenate(c) for c in zip(*parts))
             del parts
-            yield from sort_and_encode(t, d, tf, dl)
+            tf = tf.astype(np.uint64)
+            tf_norm = bm25_tf_norm(tf, dl, avgdl)
+            del dl
+            # quantize: precomputed 7-bit impact scores (irkit
+            # quantize.hpp, SURVEY.md §2.8): 0..127 = exactly one varbyte
+            # byte per posting; FLOOR so q/127 <= tf_norm and the exact
+            # per-block max_score stays a sound WAND bound
+            payload = (np.floor(tf_norm * 127.0).astype(np.uint64)
+                       if quantize else tf)
+            yield from encode_postings(
+                t, d, payload, tf_norm, tf, codec=codec,
+                block_size=block_size, docs_per_shard=docs_per_shard)
 
-    def run_sorting(batches):
-        """Input only repartitioned: the within-partition
-        sort(term, shard, docID) executes HERE as one np.lexsort —
-        same logical plan as sortWithinPartitions, ~3x cheaper than the
-        Tungsten row sort for these narrow int rows. Buffers the whole
-        partition (no spill): size n_parts so a partition's postings
-        fit an executor (the build already requires that for Tungsten's
-        in-memory sort to stay fast)."""
-        chunks = list(batches)
-        if not chunks:
-            return
-        tbl = pa.Table.from_batches(chunks)
-        del chunks
-        t, _, d, tf, dl = cols(tbl, want_shard=False)
-        del tbl
-        # when (t, d) packs into one int64 (true whenever
-        # bits(t_max) + bits(d_max) <= 63; at 10^12 docs x 10^8 vocab
-        # it does not, and sort_and_encode falls back to the 2-key
-        # lexsort) one radix-friendly argsort replaces the lexsort
-        # cascade — the sort is memory-bandwidth-bound, so fewer key
-        # passes = real wall time.
-        yield from sort_and_encode(t, d, tf, dl)
-
-    if blob_input:
-        return run_blobs
-    return run_sorting if sort_in_kernel else run_presorted
+    return run
 
 
 def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
@@ -973,29 +774,14 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
         n_parts_enc = min(n_buckets_enc,
                           max(n_parts,
                               (2 * packed) // config.ENC_PART_BYTES + 1))
-    if codec == "varbyte":
-        # the blob exchange: repartition a few thousand binary cells on
-        # the pack-time bucket of (term_id, shard) — semantically the
-        # salted repartition-by-term of BASELINE.json:6 — and unpack /
-        # sort / encode per bucket inside the kernel
-        enc_in = tok_p.repartition(int(n_parts_enc), "bucket")
-        postings_new = enc_in.mapInArrow(
-            _encode_kernel_arrow(avgdl, block_size, docs_per_shard,
-                                 quantize, blob_input=True),
-            schema=POSTINGS_SCHEMA)
-    else:
-        # generic-codec path: unpack blobs to rows, Tungsten-sort
-        # within partitions (spill-safe), stream-encode presorted
-        rows = tok_p.mapInArrow(_unpack_rows_kernel(),
-                                schema=TOK_TABLE_SCHEMA)
-        shard_expr = (F.col("doc_id") / docs_per_shard).cast("int")
-        enc_in = (rows.repartition(int(n_parts_enc), F.col("term_id"),
-                                   shard_expr)
-                  .sortWithinPartitions("term_id", "doc_id"))
-        postings_new = enc_in.mapInPandas(
-            _encode_kernel(avgdl, codec, block_size, docs_per_shard,
-                           quantize),
-            schema=POSTINGS_SCHEMA)
+    # the blob exchange: repartition a few thousand binary cells on the
+    # pack-time bucket of (term_id, shard) — semantically the salted
+    # repartition-by-term of BASELINE.json:6 — and unpack / sort /
+    # encode per bucket inside the kernel
+    postings_new = (tok_p.repartition(int(n_parts_enc), "bucket")
+                    .mapInArrow(_blob_encoder(avgdl, codec, block_size,
+                                              docs_per_shard, quantize),
+                                schema=POSTINGS_SCHEMA))
 
     post_cached = None
     if pending:
@@ -1057,7 +843,6 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
             # ~2s serial floor per build at EVERY parallelism level. Above
             # the gate (join_ids) the distributed join below remains the
             # plan.
-            import pyarrow as pa
             pt = per_term.toPandas()
             items = bc.value
             lex_pdf = pd.DataFrame(
@@ -1126,7 +911,6 @@ def build_index(spark: SparkSession, pages: DataFrame, out_dir: str, *,
     med = cnts[len(cnts) // 2] or 1
     # lineage + stats rows are driver-local already (built from the
     # shard_m collect): write them via pyarrow, not two more Spark jobs
-    import pyarrow as pa
     from irkit_spark.sources.catalog import write_artifact_driver
     pids = [int(r["partition_id"]) for r in shard_m]
     lineage_tbl = pa.table({

@@ -13,12 +13,14 @@ byte-identical per term (term IDS may differ — a fresh build numbers
 only the surviving vocabulary; tests compare by term string), docs /
 stats / terms values are equal (tests/test_compact.py).
 
-Plan shape (same as merge_indexes, which proved the decode→re-encode
-kernel byte-faithful): one cogroup of postings with the surviving
-docs per shard — membership doubles as the delete test (a doc with
-postings has doc_len >= 1, so dl == 0 <=> not in the surviving docs
-side) — plus one narrow terms re-aggregation. No corpus shuffle
-beyond the postings rewrite itself; only shards with data move.
+Plan shape (same as merge_indexes): one cogroup of postings with the
+surviving docs per shard, whose Arrow kernel decodes all of the
+shard's rows together and re-encodes the survivors in ONE
+build.encode_region call — membership doubles as the delete test (a
+doc with postings has doc_len >= 1, so dl == 0 <=> not in the
+surviving docs side) — plus one narrow terms re-aggregation. No
+corpus shuffle beyond the postings rewrite itself; only shards with
+data move.
 """
 
 from __future__ import annotations
@@ -29,13 +31,15 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from irkit_spark import config
-from irkit_spark.functions.codecs import encode_blocks, varbyte_encode
-from irkit_spark.operators.build import POSTINGS_SCHEMA
-from irkit_spark.operators.query import _decode_row_blocks
+from irkit_spark.functions.codecs import varbyte_encode
+from irkit_spark.functions.scoring import bm25_tf_norm
+from irkit_spark.operators.build import (POSTINGS_ARROW, POSTINGS_SCHEMA,
+                                         encode_postings)
+from irkit_spark.operators.merge import _decode_shard
 
 
 def _compact_kernel(avgdl: float, codec: str, block_size: int,
@@ -45,43 +49,17 @@ def _compact_kernel(avgdl: float, codec: str, block_size: int,
     re-encoded (no pass-through): block max_score depends on avgdl,
     which compaction changes, so bounds must be recomputed to stay
     exact (bound_slack resets to 1.0)."""
-    k1, b = config.BM25_K1, config.BM25_B
 
-    def run(post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"term_id": [], "partition_id": [], "n_docs": [],
-               "cf": [], "max_norm": [], "wire_bytes": [], "blocks": []}
-        if post_pdf.empty:
-            return pd.DataFrame(out)
-        shard = int(post_pdf["partition_id"].iloc[0])
-        base = shard * docs_per_shard
-        dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
-        if not docs_pdf.empty:
-            dl_arr[docs_pdf["doc_id"].to_numpy() - base] = \
-                docs_pdf["doc_len"].to_numpy()
-        tids = post_pdf["term_id"].to_numpy()
-        for i, blocks in enumerate(post_pdf["blocks"].to_numpy()):
-            d, t = _decode_row_blocks(list(blocks), codec)
-            d = d.astype(np.int64)
-            t = t.astype(np.int64)
-            dl = dl_arr[d - base]
-            keep = dl > 0          # dl==0 <=> deleted (postings => dl>=1)
-            if not keep.any():
-                continue           # term vanished from this shard
-            d, t, dl = d[keep], t[keep], dl[keep]
-            tf_norm = t.astype(np.float64) / (
-                t + k1 * (1.0 - b + b * dl / avgdl))
-            blks = encode_blocks(d.astype(np.uint64), t.astype(np.uint64),
-                                 tf_norm, block_size, codec)
-            out["term_id"].append(int(tids[i]))
-            out["partition_id"].append(shard)
-            out["n_docs"].append(int(d.size))
-            out["cf"].append(int(t.sum()))
-            out["max_norm"].append(max(bb["max_score"] for bb in blks))
-            out["wire_bytes"].append(
-                sum(len(bb["doc_bytes"]) + len(bb["tf_bytes"])
-                    for bb in blks))
-            out["blocks"].append(blks)
-        return pd.DataFrame(out)
+    def run(key, post: pa.Table, docs: pa.Table) -> pa.Table:
+        t, d, tf, dl, _ = _decode_shard(post, docs, key[0].as_py(), codec,
+                                        docs_per_shard)
+        keep = dl > 0          # dl==0 <=> deleted (postings => dl>=1)
+        t, d, tf, dl = t[keep], d[keep], tf[keep], dl[keep]
+        return pa.Table.from_batches(
+            list(encode_postings(t, d, tf, bm25_tf_norm(tf, dl, avgdl),
+                                 codec=codec, block_size=block_size,
+                                 docs_per_shard=docs_per_shard)),
+            schema=POSTINGS_ARROW)
 
     return run
 
@@ -203,8 +181,7 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str,
     docs_nar = docs.select("partition_id", "doc_id", "doc_len")
     compacted = (post.groupBy("partition_id")
                  .cogroup(docs_nar.groupBy("partition_id"))
-                 .applyInPandas(lambda lt, rt: kern(lt, rt),
-                                POSTINGS_SCHEMA))
+                 .applyInArrow(kern, POSTINGS_SCHEMA))
     write_artifact(compacted.repartition("partition_id")
                    .sortWithinPartitions("term_id"),
                    out_dir, "postings", partition_by="partition_id",
@@ -250,8 +227,6 @@ def compact_index(spark: SparkSession, in_dir: str, out_dir: str,
     total_postings = sum(int(r["postings_cnt"]) for r in shard_m)
     cnts = sorted(r["postings_cnt"] for r in shard_m) or [0]
     med = cnts[len(cnts) // 2] or 1
-    import pyarrow as pa
-
     from irkit_spark.sources.catalog import write_artifact_driver
     lineage_tbl = pa.table({
         "partition_id": pa.array([int(r["partition_id"])

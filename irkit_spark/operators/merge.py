@@ -11,11 +11,12 @@ makes possible (SURVEY.md U1).
 
 Merge plan (one narrow shuffle):
   postings := unionByName(batch postings)
-  cogroup by partition_id with the merged docs table (for doc lengths)
-  kernel: per term within the shard —
+  cogroup by partition_id with the merged docs table (for doc lengths),
+  one Arrow kernel per shard —
     single source row  -> pass through untouched (no decode; the common
                           case when batches were doc-range partitioned)
-    multiple rows      -> decode, concat, sort by doc_id, re-encode with
+    multiple rows      -> decoded together, sorted by (term, doc) and
+                          re-encoded in ONE build.encode_region call with
                           exact per-block max tf_norm (doc lengths are
                           in-shard, avgdl is a broadcast scalar)
   terms := re-aggregate df/cf sums per term_id; max_score from merged
@@ -31,76 +32,62 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from irkit_spark import config
-from irkit_spark.functions.codecs import encode_blocks
-from irkit_spark.operators.build import POSTINGS_SCHEMA
+from irkit_spark.functions.scoring import bm25_tf_norm
+from irkit_spark.operators.build import (POSTINGS_ARROW, POSTINGS_SCHEMA,
+                                         encode_postings)
 from irkit_spark.operators.query import _decode_row_blocks
+
+
+def _decode_shard(post: pa.Table, docs: pa.Table, shard: int, codec: str,
+                  docs_per_shard: int):
+    """One shard's postings rows + docs rows -> per-posting arrays
+    (term_id, doc_id i64, payload u64, doc_len f64; a doc absent from
+    `docs` has doc_len 0) and each row's first posting index. All rows'
+    blocks decode in one _decode_row_blocks call."""
+    d, payload = _decode_row_blocks(
+        post.column("blocks").combine_chunks().flatten().to_pylist(), codec)
+    d = d.astype(np.int64)
+    n = post.column("n_docs").to_numpy()
+    first = np.zeros(n.size, dtype=np.int64)
+    np.cumsum(n[:-1], out=first[1:])
+    base = shard * docs_per_shard
+    dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
+    dl_arr[docs.column("doc_id").to_numpy() - base] = \
+        docs.column("doc_len").to_numpy()
+    return (np.repeat(post.column("term_id").to_numpy(), n), d, payload,
+            dl_arr[d - base], first)
 
 
 def _merge_kernel(avgdl: float, codec: str, block_size: int,
                   docs_per_shard: int, quantized: bool = False):
-    k1, b = config.BM25_K1, config.BM25_B
-
-    def run(post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"term_id": [], "partition_id": [], "n_docs": [],
-               "cf": [], "max_norm": [], "wire_bytes": [], "blocks": []}
-        if post_pdf.empty:
-            return pd.DataFrame(out)
-        shard = int(post_pdf["partition_id"].iloc[0])
-        base = shard * docs_per_shard
-        dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
-        if not docs_pdf.empty:
-            dl_arr[docs_pdf["doc_id"].to_numpy() - base] = \
-                docs_pdf["doc_len"].to_numpy()
-        for tid, grp in post_pdf.groupby("term_id", sort=True):
-            if len(grp) == 1:
-                r = grp.iloc[0]
-                out["term_id"].append(int(tid))
-                out["partition_id"].append(shard)
-                out["n_docs"].append(int(r["n_docs"]))
-                out["cf"].append(int(r["cf"]))
-                out["max_norm"].append(float(r["max_norm"]))
-                out["wire_bytes"].append(int(r["wire_bytes"]))
-                out["blocks"].append(list(r["blocks"]))
-                continue
-            ds, ts = [], []
-            # iterate the blocks column directly (no per-row Series
-            # construction — iterrows built one per source row)
-            for blocks in grp["blocks"].to_numpy():
-                d, t = _decode_row_blocks(list(blocks), codec)
-                ds.append(d.astype(np.int64))
-                ts.append(t.astype(np.int64))
-            d = np.concatenate(ds)
-            t = np.concatenate(ts)
-            order = np.argsort(d, kind="stable")
-            d, t = d[order], t[order]
-            if quantized:
-                # payload IS the 7-bit impact: block max = max(q)/127
-                tf_norm = t.astype(np.float64) / 127.0
-            else:
-                dl = dl_arr[d - base]
-                tf_norm = t.astype(np.float64) / (
-                    t + k1 * (1.0 - b + b * dl / avgdl))
-            blks = encode_blocks(
-                d.astype(np.uint64), t.astype(np.uint64), tf_norm,
-                block_size, codec)
-            out["term_id"].append(int(tid))
-            out["partition_id"].append(shard)
-            out["n_docs"].append(int(d.size))
-            # cf from the input rows' aggregates, NOT the decoded
-            # payload (which is the impact, not tf, when quantized)
-            out["cf"].append(int(grp["cf"].sum()))
-            out["max_norm"].append(
-                max(b["max_score"] for b in blks))
-            out["wire_bytes"].append(
-                sum(len(b["doc_bytes"]) + len(b["tf_bytes"])
-                    for b in blks))
-            out["blocks"].append(blks)
-        return pd.DataFrame(out)
+    def run(key, post: pa.Table, docs: pa.Table) -> pa.Table:
+        _, inv, cnt = np.unique(post.column("term_id").to_numpy(),
+                                return_inverse=True, return_counts=True)
+        multi = cnt[inv] > 1
+        single = (post.filter(pa.array(~multi))
+                  .select(POSTINGS_ARROW.names).cast(POSTINGS_ARROW))
+        if not multi.any():
+            return single
+        post = post.filter(pa.array(multi))
+        t, d, payload, dl, first = _decode_shard(
+            post, docs, key[0].as_py(), codec, docs_per_shard)
+        # payload IS the 7-bit impact when quantized: block max =
+        # max(q)/127
+        tf_norm = (payload / 127.0 if quantized
+                   else bm25_tf_norm(payload, dl, avgdl))
+        # cf from the input rows' aggregates, NOT the decoded payload
+        # (which is the impact, not tf, when quantized)
+        cf = np.zeros(d.size, dtype=np.int64)
+        cf[first] = post.column("cf").to_numpy()
+        merged = encode_postings(t, d, payload, tf_norm, cf, codec=codec,
+                                 block_size=block_size,
+                                 docs_per_shard=docs_per_shard)
+        return pa.concat_tables([single, pa.Table.from_batches(
+            list(merged), schema=POSTINGS_ARROW)])
 
     return run
 
@@ -204,8 +191,7 @@ def merge_indexes(spark: SparkSession, in_dirs: list[str],
         merged = (post.groupBy("partition_id")
                   .cogroup(docs.select("partition_id", "doc_id", "doc_len")
                            .groupBy("partition_id"))
-                  .applyInPandas(lambda lt, rt: kern(lt, rt),
-                                 POSTINGS_SCHEMA))
+                  .applyInArrow(kern, POSTINGS_SCHEMA))
         write_artifact(merged.repartition("partition_id")
                        .sortWithinPartitions("term_id"),
                        out_dir, "postings", partition_by="partition_id",
@@ -283,7 +269,6 @@ def merge_indexes(spark: SparkSession, in_dirs: list[str],
     med = cnts[len(cnts) // 2] or 1
     # lineage/stats rows are driver-local: pyarrow write, no Spark jobs
     # (same rationale as build stage 5)
-    import pyarrow as pa
     from irkit_spark.sources.catalog import write_artifact_driver
     lineage_tbl = pa.table({
         "partition_id": pa.array([int(r["partition_id"])

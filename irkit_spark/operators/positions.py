@@ -149,8 +149,7 @@ def _merge_groups_iter(batches: Iterator[pd.DataFrame]
     """Kernel B: streaming (term_id, shard) group merger over rows
     sorted by (term_id, partition_id, doc_id) within the partition.
     A group may span Arrow batches; the last (possibly incomplete)
-    group of each batch is carried into the next — the same carry
-    protocol as the index encode kernel (operators/build._encode_kernel).
+    group of each batch is carried into the next.
     Per-doc varbyte streams concatenate verbatim (self-delimiting), so
     the merge is byte joins — no re-encode.
 

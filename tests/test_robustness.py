@@ -9,17 +9,20 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from irkit_spark.operators.build import _encode_kernel_arrow
+from irkit_spark.operators import build
+from irkit_spark.operators.build import _blob_encoder, _pack_blob_frames
 
 
-def _tok_batch(term_id, shard, doc_id, tf, dl):
+def _blob_batch(term_id, doc_id, tf, dl, docs_per_shard):
+    """Token rows -> one packed-blob RecordBatch (TOK_BLOB_SCHEMA), all
+    in one bucket, as the build's tokenize pass writes them."""
+    buckets, shards, blobs = _pack_blob_frames(
+        np.asarray(doc_id, dtype=np.int64), np.asarray(term_id, np.int32),
+        np.asarray(tf, np.int32), np.asarray(dl, np.int32), 1,
+        docs_per_shard)
     return pa.RecordBatch.from_arrays(
-        [pa.array(np.asarray(term_id, dtype=np.int32), pa.int32()),
-         pa.array(np.asarray(shard, dtype=np.int32), pa.int32()),
-         pa.array(np.asarray(doc_id, dtype=np.int64), pa.int64()),
-         pa.array(np.asarray(tf, dtype=np.int64), pa.int64()),
-         pa.array(np.asarray(dl, dtype=np.int64), pa.int64())],
-        names=["term_id", "shard", "doc_id", "tf", "dl"])
+        [pa.array(buckets, pa.int32()), pa.array(shards, pa.int32()),
+         pa.array(blobs, pa.binary())], names=["bucket", "shard", "blob"])
 
 
 def _rows(batches):
@@ -33,30 +36,34 @@ def _rows(batches):
     return sorted(out)
 
 
-def test_arrow_encoder_splits_oversized_regions():
-    """A region whose varbyte wire stream exceeds the binary-offset
-    limit is split at group boundaries: same postings out, never an
-    int32 offset overflow (exercised with a tiny patched limit)."""
+def test_arrow_encoder_splits_oversized_regions(monkeypatch):
+    """A region whose wire stream exceeds the binary-offset limit is
+    split at group boundaries: same postings out, never an int32 offset
+    overflow (exercised with a tiny patched limit, for the whole-stream
+    varbyte path and the per-block codec path)."""
     rng = np.random.default_rng(7)
     n_terms, docs = 40, 300
     t = np.repeat(np.arange(n_terms, dtype=np.int32), docs)
-    s = np.zeros(t.size, dtype=np.int32)
     d = np.tile(np.arange(docs, dtype=np.int64) * 3, n_terms)
     tf = rng.integers(1, 200, size=t.size).astype(np.int64)
     dl = np.full(t.size, 120, dtype=np.int64)
+    batch = _blob_batch(t, d, tf, dl, 1000)
+    default = build.MAX_BIN_OFFSET
 
-    def run(limit):
-        k = _encode_kernel_arrow(100.0, 16, 1000, max_bin_offset=limit)
-        return list(k(iter([_tok_batch(t, s, d, tf, dl)])))
+    def run(codec, limit):
+        monkeypatch.setattr(build, "MAX_BIN_OFFSET", limit)
+        k = _blob_encoder(100.0, codec, 16, 1000)
+        return list(k(iter([batch])))
 
-    full = run(None)
-    assert len(full) == 1
-    limited = run(4096)          # forces many recursive splits
-    assert len(limited) > 1
-    assert _rows(limited) == _rows(full)
-    # one group alone over the limit cannot be split -> explicit error
-    with pytest.raises(ValueError, match="2GB"):
-        run(16)
+    for codec in ("varbyte", "streamvbyte"):
+        full = run(codec, default)
+        assert len(full) == 1
+        limited = run(codec, 4096)      # forces many recursive splits
+        assert len(limited) > 1
+        assert _rows(limited) == _rows(full)
+        # one group alone over the limit cannot be split -> explicit error
+        with pytest.raises(ValueError, match="2GB"):
+            run(codec, 16)
 
 
 def test_empty_and_single_doc_builds(spark, tmp_path):

@@ -45,11 +45,10 @@ def _work(part: int) -> float:
     import pyarrow.parquet as pq
 
     from irkit_spark import config
-    from irkit_spark.operators.build import _encode_kernel_arrow
+    from irkit_spark.operators.build import _blob_encoder
 
     sub = pq.read_table(f"{_PART_DIR}/part{part}.parquet")
-    kern = _encode_kernel_arrow(180.0, config.BLOCK_SIZE,
-                                500000 // 64, False, blob_input=True)
+    kern = _blob_encoder(180.0, "varbyte", config.BLOCK_SIZE, 500000 // 64)
     t0 = time.monotonic()
     for _ in kern(sub.to_batches(max_chunksize=65536)):
         pass
