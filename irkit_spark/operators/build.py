@@ -234,7 +234,7 @@ def encode_postings(t, d, payload, tf_norm, tf=None, *, codec: str,
     yield from encode_region(
         t[order], (d // docs_per_shard).astype(np.int32), d,
         payload[order], tf_norm[order],
-        None if tf is None else tf[order],
+        None if tf is None or tf is payload else tf[order],
         codec=codec, block_size=block_size)
 
 
