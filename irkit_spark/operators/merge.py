@@ -68,26 +68,27 @@ def _merge_kernel(avgdl: float, codec: str, block_size: int,
         _, inv, cnt = np.unique(post.column("term_id").to_numpy(),
                                 return_inverse=True, return_counts=True)
         multi = cnt[inv] > 1
-        single = (post.filter(pa.array(~multi))
-                  .select(POSTINGS_ARROW.names).cast(POSTINGS_ARROW))
-        if not multi.any():
-            return single
-        post = post.filter(pa.array(multi))
-        t, d, payload, dl, first = _decode_shard(
-            post, docs, key[0].as_py(), codec, docs_per_shard)
-        # payload IS the 7-bit impact when quantized: block max =
-        # max(q)/127
-        tf_norm = (payload / 127.0 if quantized
-                   else bm25_tf_norm(payload, dl, avgdl))
-        # cf from the input rows' aggregates, NOT the decoded payload
-        # (which is the impact, not tf, when quantized)
-        cf = np.zeros(d.size, dtype=np.int64)
-        cf[first] = post.column("cf").to_numpy()
-        merged = encode_postings(t, d, payload, tf_norm, cf, codec=codec,
-                                 block_size=block_size,
-                                 docs_per_shard=docs_per_shard)
-        return pa.concat_tables([single, pa.Table.from_batches(
-            list(merged), schema=POSTINGS_ARROW)])
+        parts = [post.filter(pa.array(~multi))
+                 .select(POSTINGS_ARROW.names).cast(POSTINGS_ARROW)]
+        if multi.any():
+            post = post.filter(pa.array(multi))
+            t, d, payload, dl, first = _decode_shard(
+                post, docs, key[0].as_py(), codec, docs_per_shard)
+            # payload IS the 7-bit impact when quantized: block max =
+            # max(q)/127
+            tf_norm = (payload / 127.0 if quantized
+                       else bm25_tf_norm(payload, dl, avgdl))
+            # cf from the input rows' aggregates, NOT the decoded payload
+            # (which is the impact, not tf, when quantized)
+            cf = np.zeros(d.size, dtype=np.int64)
+            cf[first] = post.column("cf").to_numpy()
+            parts.append(pa.Table.from_batches(list(encode_postings(
+                t, d, payload, tf_norm, cf, codec=codec,
+                block_size=block_size, docs_per_shard=docs_per_shard)),
+                schema=POSTINGS_ARROW))
+        # the shard file keeps this row order: term order, as in a
+        # single-shot build's shard file
+        return pa.concat_tables(parts).sort_by("term_id")
 
     return run
 

@@ -4,10 +4,12 @@ identical index; lineage well-formed."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,6 +101,29 @@ def test_merge_equals_single_shot(spark, split_build):
     a = _postings_canon(spark, full_dir)
     b = _postings_canon(spark, merged_dir)
     assert a == b                     # byte-identical postings content
+
+
+def _shard_files(path):
+    """shard dir name -> the one postings parquet file in it."""
+    out = {}
+    for f in glob.glob(os.path.join(path, "postings", "*", "*.parquet")):
+        shard = os.path.basename(os.path.dirname(f))
+        assert shard not in out
+        out[shard] = f
+    return out
+
+
+def test_merged_shard_files_match_single_shot(split_build):
+    """Each merged shard file lists its rows in term order, as the
+    single-shot build's does, so the two files have the same size."""
+    full_dir, merged_dir, _ = split_build
+    full, merged = _shard_files(full_dir), _shard_files(merged_dir)
+    assert merged.keys() == full.keys() and full
+    for shard, f in merged.items():
+        tid = pq.read_table(f, columns=["term_id"]).column(
+            "term_id").to_numpy()
+        assert (np.diff(tid) > 0).all(), shard
+        assert os.path.getsize(f) == os.path.getsize(full[shard]), shard
 
 
 def test_merge_variant_postings_pinned(spark, split_build_variant):
