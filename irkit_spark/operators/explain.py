@@ -8,14 +8,16 @@ acceleration artifacts (shard_stats / postings_tier / positions) are
 present AND fresh, and — when the selection statistics exist — the
 per-shard upper-bound profile selective search would rank by. Pure
 metadata: the report is built from the lexicon dict, artifact commit
-signals and (optionally) the narrow shard-bound pass; the posting
-payload bytes are never read.
+signals, search()'s own serving gates (which read a tombstone set, if
+one exists, to size it against DEL_BROADCAST_MAX) and (optionally)
+the narrow shard-bound pass; the posting payload bytes are never read.
 """
 
 from __future__ import annotations
 
 from irkit_spark import config
-from irkit_spark.operators.query import Index, _parse_boosts
+from irkit_spark.operators.query import (Index, _parse_boosts, fits_local,
+                                         serving_gates)
 
 
 def explain_query(index: Index, query: str, k: int = 10,
@@ -32,8 +34,11 @@ def explain_query(index: Index, query: str, k: int = 10,
                      of postings the pruned scan touches before
                      block-level skipping
       route        — the path search(local=None) would take: "empty"
-                     (all OOV), "local" (driver kernel, est_postings
-                     <= LOCAL_QUERY_MAX_POSTINGS), or "distributed"
+                     (all OOV), "local" (the driver-kernel gate
+                     query.fits_local holds: est_postings <=
+                     LOCAL_QUERY_MAX_POSTINGS, doc lengths within the
+                     broadcast cap, no tombstone set above
+                     DEL_BROADCAST_MAX), or "distributed"
       index        — {n_docs, avgdl, coll_len, codec, quantized,
                      docs_per_shard, n_shards_max}
       deletions    — whether a tombstone set is present
@@ -57,7 +62,8 @@ def explain_query(index: Index, query: str, k: int = 10,
     est = sum(m["df"] for m in qmeta)
     if not qmeta:
         route = "empty"
-    elif est <= config.LOCAL_QUERY_MAX_POSTINGS:
+    elif fits_local(index, est,
+                    serving_gates(index, with_dl=False)[2]):
         route = "local"
     else:
         route = "distributed"

@@ -34,10 +34,11 @@ group via the byte-offset table — no per-value Python), one
 repartition on hash(term_id, shard) sized from the known collection
 length, and a streaming group-merge. A phrase query is a term_id-
 pruned scan of positions/ (dir-partitioned by shard, term-sorted row
-groups) + a per-shard vectorized numpy kernel + a tiny top-k — the
-exact plan shape of operators/query.search, so everything that makes
-that path 100 TB-safe (no corpus shuffle at query time, dl broadcast
-gate with cogroup fallback above it) applies unchanged.
+groups) + a per-shard vectorized numpy kernel + a tiny top-k, run
+through operators/query.shard_plan and serving_gates — the functions
+search() runs through, so everything that makes that path 100 TB-safe
+(no corpus shuffle at query time, dl broadcast gate with cogroup
+fallback above it, tombstones masked or anti-joined) applies unchanged.
 """
 
 from __future__ import annotations
@@ -446,10 +447,71 @@ def decode_positions_row(r):
     return docs, cnts, offs, flat - base
 
 
+def _occurrence_keys(row, base: int, pad: np.int64) -> np.ndarray:
+    """A decoded positions row's occurrences as sorted, unique int64
+    keys (doc_local << 33 | pos + pad)."""
+    docs, cnts, _, pos_flat = row
+    return (np.repeat(docs - base, cnts) << _POS_BITS) + pos_flat + pad
+
+
+def _positions_kernel(match, tf_col: str, uniq_meta: list[dict],
+                      avgdl: float, k: int, docs_per_shard: int,
+                      dl_bc=None, del_bc=None, restrict: bool = False):
+    """Per-shard positions scorer: match(rows, base) maps the decoded
+    rows {term_id: decode_positions_row} to ascending (doc-local ids,
+    match counts), or None. Then the main kernel's doc-length and
+    selection head, BM25 over uniq_meta ([{term_id, idf}] ascending
+    term_id — the pinned add order, so scores are bit-identical to
+    search()) and the top-k of (doc_id, tf_col, score)."""
+    from irkit_spark.operators.query import shard_doc_lengths, topk_frame
+    uniq_ids = [m["term_id"] for m in uniq_meta]
+    idf_by = {m["term_id"]: m["idf"] for m in uniq_meta}
+
+    def run(post_pdf: pd.DataFrame,
+            docs_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
+        empty = pd.DataFrame({
+            "doc_id": pd.Series([], dtype="int64"),
+            tf_col: pd.Series([], dtype="int64"),
+            "score": pd.Series([], dtype="float64")})
+        if post_pdf.empty:
+            return empty
+        shard = int(post_pdf["partition_id"].iloc[0])
+        base = shard * docs_per_shard
+        head = shard_doc_lengths(shard, docs_per_shard, dl_bc, docs_pdf,
+                                 restrict, del_bc)
+        if head is None:
+            return empty
+        dl_arr, valid = head
+        # one row per (term, shard) — same iterrows invariant as the
+        # main shard kernel (operators/query.py run()); blocks-per-row
+        # layouts would need a column pull here too
+        rows = {int(r["term_id"]): decode_positions_row(r)
+                for _, r in post_pdf.iterrows()}
+        got = match(rows, base)
+        if got is None:
+            return empty
+        dloc, mtf = got
+        if valid is not None:
+            # selection-only, like the main kernels' `valid` array
+            sel = valid[dloc]
+            dloc, mtf = dloc[sel], mtf[sel]
+            if dloc.size == 0:
+                return empty
+        cand = dloc + base
+        dl = dl_arr[dloc]
+        score = np.zeros(cand.size, dtype=np.float64)
+        for t in uniq_ids:  # ascending term_id: pinned add order
+            docs, cnts, _, _ = rows[t]
+            ix = np.searchsorted(docs, cand)  # present by construction
+            score += idf_by[t] * bm25_tf_norm(cnts[ix], dl, avgdl)
+        return topk_frame(cand, score, k, **{tf_col: mtf})
+
+    return run
+
+
 def _phrase_kernel(pattern: list[int], uniq_meta: list[dict],
                    avgdl: float, k: int, docs_per_shard: int,
-                   dl_bc=None, slop: int = 0, del_bc=None,
-                   restrict: bool = False):
+                   slop: int = 0, **gates):
     """Per-shard phrase/proximity scorer, fully vectorized: token i's
     occurrences become int64 keys (doc_local << 33 | pos + PAD) — each
     key array is sorted+unique by construction (docs ascending,
@@ -464,39 +526,17 @@ def _phrase_kernel(pattern: list[int], uniq_meta: list[dict],
     bound from crossing the packed doc boundary, so a window can never
     leak occurrences from the previous doc.
 
-    pattern = term_ids in phrase order (duplicates kept); uniq_meta =
-    [{term_id, idf}] ascending term_id — the pinned float add order
-    every scorer in this engine shares (bit-identical scores to
-    search() on the same doc set)."""
-    uniq_ids = [m["term_id"] for m in uniq_meta]
-    idf_by = {m["term_id"]: m["idf"] for m in uniq_meta}
+    pattern = term_ids in phrase order (duplicates kept); scoring,
+    tombstones and top-k are _positions_kernel's."""
     need = set(pattern)
-    pad = np.int64(1 + slop)
-    step = np.int64(1 + slop)
+    pad = step = np.int64(1 + slop)
 
-    def run(post_pdf: pd.DataFrame,
-            docs_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "doc_id": pd.Series([], dtype="int64"),
-            "phrase_tf": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64")})
-        if post_pdf.empty:
-            return empty
-        shard = int(post_pdf["partition_id"].iloc[0])
-        base = shard * docs_per_shard
-        rows: dict[int, tuple] = {}
-        # one row per (term, shard) — same iterrows invariant as the
-        # main shard kernel (operators/query.py run()); blocks-per-row
-        # layouts would need a column pull here too
-        for _, r in post_pdf.iterrows():
-            rows[int(r["term_id"])] = decode_positions_row(r)
+    def match(rows, base):
         if not need.issubset(rows):
-            return empty  # some phrase term absent from this shard
+            return None  # some phrase term absent from this shard
         keys = None
         for t in pattern:
-            docs, cnts, offs, pos_flat = rows[t]
-            dloc = np.repeat(docs - base, cnts)
-            k_i = (dloc << _POS_BITS) + pos_flat + pad
+            k_i = _occurrence_keys(rows[t], base, pad)
             if keys is None:
                 keys = k_i
                 continue
@@ -505,61 +545,56 @@ def _phrase_kernel(pattern: list[int], uniq_meta: list[dict],
             hi = np.searchsorted(keys, k_i, side="left")
             keys = k_i[hi > lo]
             if keys.size == 0:
-                return empty
-        dloc, ptf = np.unique(keys >> _POS_BITS, return_counts=True)
-        cand = dloc + base
-        # tombstones (operators/delete.py): selection-only mask on the
-        # match set, same contract as the main kernels' `valid` array
-        if del_bc is not None:
-            dels = del_bc.value.get(shard)
-            if dels is not None and dels.size:
-                ix = np.searchsorted(dels, cand)
-                hit = np.zeros(cand.size, dtype=bool)
-                ok = ix < dels.size
-                hit[ok] = dels[ix[ok]] == cand[ok]
-                if hit.any():
-                    sel = ~hit
-                    dloc, cand, ptf = dloc[sel], cand[sel], ptf[sel]
-                    if cand.size == 0:
-                        return empty
-        # BM25 over the phrase's unique terms, survivors only
-        if dl_bc is not None:
-            arr = dl_bc.value.get(shard)
-            if arr is None:
-                return empty
-            dl = arr.astype(np.float64)[dloc]
-        else:
-            if docs_pdf is None or docs_pdf.empty:
-                return empty
-            dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
-            d_ids = docs_pdf["doc_id"].to_numpy() - base
-            dl_arr[d_ids] = docs_pdf["doc_len"].to_numpy()
-            if restrict:
-                # above-gate deletions: the docs side arrives with the
-                # tombstones anti-joined out — survivors must appear
-                # in it (the main kernels' restrict semantics)
-                valid = np.zeros(docs_per_shard, dtype=bool)
-                valid[d_ids] = True
-                sel = valid[dloc]
-                dloc, cand, ptf = dloc[sel], cand[sel], ptf[sel]
-                if cand.size == 0:
-                    return empty
-            dl = dl_arr[dloc]
-        score = np.zeros(cand.size, dtype=np.float64)
-        for t in uniq_ids:  # ascending term_id: pinned add order
-            docs, cnts, offs, pos_flat = rows[t]
-            ix = np.searchsorted(docs, cand)  # present by construction
-            score += idf_by[t] * bm25_tf_norm(cnts[ix], dl, avgdl)
-        if cand.size > k:
-            kth = np.partition(score, cand.size - k)[cand.size - k]
-            sel = score >= kth
-            cand, ptf, score = cand[sel], ptf[sel], score[sel]
-        order = np.lexsort((cand, -score))[:k]
-        return pd.DataFrame({"doc_id": cand[order].astype(np.int64),
-                             "phrase_tf": ptf[order].astype(np.int64),
-                             "score": score[order]})
+                return None
+        return np.unique(keys >> _POS_BITS, return_counts=True)
 
-    return run
+    return _positions_kernel(match, "phrase_tf", uniq_meta, avgdl, k,
+                             docs_per_shard, **gates)
+
+
+def _positions_search(index, toks: list[str], what: str, schema: str,
+                      k: int, make_kernel) -> DataFrame:
+    """Guards, token -> term_id lookup (the warm driver dict, else a
+    pruned terms filter) and plan shared by phrase and near:
+    make_kernel(qmeta, tids, **gates) over a term_id-pruned positions
+    scan via query.shard_plan, then the global top-k. Empty when a
+    token is OOV."""
+    from irkit_spark.operators.query import serving_gates, shard_plan
+    from irkit_spark.operators.segments import SegmentedIndex
+    if isinstance(index, SegmentedIndex):
+        raise ValueError(
+            f"{what} retrieval reads the positions artifact, which is "
+            "per-segment — merge_indexes the segments first "
+            "(SegmentedIndex federates the docID+tf tier only)")
+    spark = index.spark
+    if not toks:
+        return spark.createDataFrame([], schema)
+    if not has_positions(index):
+        raise ValueError(f"index at {index.path} has no positions/ "
+                         "artifact — run build_positions first")
+    if index.docs_per_shard >= (1 << 30):
+        raise ValueError(f"{what} kernel packs doc-local ids into int64 "
+                         "keys: docs_per_shard must be < 2^30")
+    qmeta = index.lookup_query(" ".join(toks))
+    if len(qmeta) < len(set(toks)):
+        return spark.createDataFrame([], schema)
+    td = index._terms_dict()
+    if td is not None:
+        by_term = {t: td[t][0] for t in set(toks)}
+    else:
+        by_term = {r["term"]: int(r["term_id"]) for r in
+                   index.terms.filter(
+                       F.col("term").isin(sorted(set(toks))))
+                   .select("term", "term_id").collect()}
+    tids = [by_term[t] for t in toks]
+    qpos = read_positions(spark, index.path).filter(
+        F.col("term_id").isin(sorted(set(tids))))
+    dl_bc, del_bc, del_over_gate = serving_gates(index)
+    kern = make_kernel(qmeta, tids, dl_bc=dl_bc, del_bc=del_bc,
+                       restrict=del_over_gate)
+    out = shard_plan(index, qpos, kern, schema, dl_bc,
+                     del_over_gate=del_over_gate)
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def phrase_search(index, phrase: str, k: int = 10,
@@ -570,63 +605,18 @@ def phrase_search(index, phrase: str, k: int = 10,
     BM25 over the phrase's unique terms with global collection stats.
     Requires build_positions to have run on the index.
 
-    Plan: term_id-pruned positions scan -> per-shard numpy kernel ->
-    tiny top-k; doc lengths ride the gated broadcast, cogrouping
-    against the touched shards of the docs table above the cap —
-    identical scale shape to search()."""
-    from irkit_spark.operators.segments import SegmentedIndex
-    if isinstance(index, SegmentedIndex):
-        raise ValueError(
-            "phrase/snippet retrieval reads the positions artifact, "
-            "which is per-segment — merge_indexes the segments first "
-            "(SegmentedIndex federates the docID+tf tier only)")
-    from irkit_spark.operators.query import _docs_touched
-    spark = index.spark
-    empty = spark.createDataFrame([], PHRASE_SCHEMA)
-    toks = tokenize(phrase)
-    if not toks:
-        return empty
-    if not has_positions(index):
-        raise ValueError(f"index at {index.path} has no positions/ "
-                         "artifact — run build_positions first")
-    if index.docs_per_shard >= (1 << 30):
-        raise ValueError("phrase kernel packs doc-local ids into "
-                         "int64 keys: docs_per_shard must be < 2^30")
+    Plan (_positions_search): term_id-pruned positions scan ->
+    per-shard numpy kernel -> tiny top-k, through the same
+    query.shard_plan as search(): doc lengths ride the gated
+    broadcast, cogrouping against the touched shards of the docs
+    table above the cap."""
     if not (0 <= slop < (1 << 30)):
         raise ValueError("slop must be a small non-negative int")
-    qmeta = index.lookup_query(" ".join(toks))
-    if len(qmeta) < len(set(toks)):
-        return empty  # an OOV phrase token: no doc can match
-    # token -> term_id in phrase order; prefer the warm driver dict
-    # (zero Spark jobs), fall back to a pruned terms filter
-    td = index._terms_dict()
-    if td is not None:
-        by_term = {t: td[t][0] for t in set(toks)}
-    else:
-        by_term = {r["term"]: int(r["term_id"]) for r in
-                   index.terms.filter(
-                       F.col("term").isin(sorted(set(toks))))
-                   .select("term", "term_id").collect()}
-    pattern = [by_term[t] for t in toks]
-    qpos = read_positions(spark, index.path).filter(
-        F.col("term_id").isin(sorted(set(pattern))))
-    has_del = index.has_deletions()
-    del_bc = index.deletions_broadcast() if has_del else None
-    del_over_gate = has_del and del_bc is None
-    dl_bc = None if del_over_gate else index.doc_len_broadcast()
-    kern = _phrase_kernel(pattern, qmeta, index.avgdl, k,
-                          index.docs_per_shard, dl_bc=dl_bc, slop=slop,
-                          del_bc=del_bc, restrict=del_over_gate)
-    if dl_bc is not None:
-        out = (qpos.groupBy("partition_id")
-               .applyInPandas(lambda pdf: kern(pdf), PHRASE_SCHEMA))
-    else:
-        qdocs = _docs_touched(index, qpos,
-                              exclude_deleted=del_over_gate)
-        out = (qpos.groupBy("partition_id")
-               .cogroup(qdocs.groupBy("partition_id"))
-               .applyInPandas(lambda lt, rt: kern(lt, rt), PHRASE_SCHEMA))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _positions_search(
+        index, tokenize(phrase), "phrase", PHRASE_SCHEMA, k,
+        lambda qmeta, tids, **gates: _phrase_kernel(
+            tids, qmeta, index.avgdl, k, index.docs_per_shard,
+            slop=slop, **gates))
 
 
 NEAR_SCHEMA = "doc_id long, near_tf long, score double"
@@ -634,8 +624,7 @@ NEAR_SCHEMA = "doc_id long, near_tf long, score double"
 
 def _near_kernel(tid_a: int, tid_b: int, uniq_meta: list[dict],
                  avgdl: float, k: int, docs_per_shard: int,
-                 window: int, dl_bc=None, del_bc=None,
-                 restrict: bool = False):
+                 window: int, **gates):
     """Per-shard unordered-NEAR scorer (Lucene SpanNearQuery,
     inOrder=false, two clauses): a doc matches iff some occurrence
     pair |pos_a - pos_b| <= window. Same packed-key vectorization as
@@ -643,86 +632,24 @@ def _near_kernel(tid_a: int, tid_b: int, uniq_meta: list[dict],
     key in [k - window, k + window] (two searchsorted calls, no
     per-candidate loop); near_tf = surviving b occurrences per doc.
     PAD = 1 + window keeps both window edges inside the packed doc
-    range. Scoring/tombstones/top-k identical to _phrase_kernel."""
-    uniq_ids = [m["term_id"] for m in uniq_meta]
-    idf_by = {m["term_id"]: m["idf"] for m in uniq_meta}
+    range. Scoring, tombstones and top-k are _positions_kernel's."""
     pad = np.int64(1 + window)
     w = np.int64(window)
 
-    def run(post_pdf: pd.DataFrame,
-            docs_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "doc_id": pd.Series([], dtype="int64"),
-            "near_tf": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64")})
-        if post_pdf.empty:
-            return empty
-        shard = int(post_pdf["partition_id"].iloc[0])
-        base = shard * docs_per_shard
-        rows: dict[int, tuple] = {}
-        for _, r in post_pdf.iterrows():
-            rows[int(r["term_id"])] = decode_positions_row(r)
+    def match(rows, base):
         if tid_a not in rows or tid_b not in rows:
-            return empty
-        keys = {}
-        for t in (tid_a, tid_b):
-            docs, cnts, offs, pos_flat = rows[t]
-            dloc = np.repeat(docs - base, cnts)
-            keys[t] = (dloc << _POS_BITS) + pos_flat + pad
-        ka, kb = keys[tid_a], keys[tid_b]
+            return None
+        ka = _occurrence_keys(rows[tid_a], base, pad)
+        kb = _occurrence_keys(rows[tid_b], base, pad)
         lo = np.searchsorted(ka, kb - w, side="left")
         hi = np.searchsorted(ka, kb + w, side="right")
         surv = kb[hi > lo]
         if surv.size == 0:
-            return empty
-        dloc, ntf = np.unique(surv >> _POS_BITS, return_counts=True)
-        cand = dloc + base
-        if del_bc is not None:
-            dels = del_bc.value.get(shard)
-            if dels is not None and dels.size:
-                ix = np.searchsorted(dels, cand)
-                hit = np.zeros(cand.size, dtype=bool)
-                ok = ix < dels.size
-                hit[ok] = dels[ix[ok]] == cand[ok]
-                if hit.any():
-                    sel = ~hit
-                    dloc, cand, ntf = dloc[sel], cand[sel], ntf[sel]
-                    if cand.size == 0:
-                        return empty
-        if dl_bc is not None:
-            arr = dl_bc.value.get(shard)
-            if arr is None:
-                return empty
-            dl = arr.astype(np.float64)[dloc]
-        else:
-            if docs_pdf is None or docs_pdf.empty:
-                return empty
-            dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
-            d_ids = docs_pdf["doc_id"].to_numpy() - base
-            dl_arr[d_ids] = docs_pdf["doc_len"].to_numpy()
-            if restrict:
-                valid = np.zeros(docs_per_shard, dtype=bool)
-                valid[d_ids] = True
-                sel = valid[dloc]
-                dloc, cand, ntf = dloc[sel], cand[sel], ntf[sel]
-                if cand.size == 0:
-                    return empty
-            dl = dl_arr[dloc]
-        score = np.zeros(cand.size, dtype=np.float64)
-        for t in uniq_ids:  # ascending term_id: pinned add order
-            docs, cnts, offs, pos_flat = rows[t]
-            ix = np.searchsorted(docs, cand)
-            score += idf_by[t] * bm25_tf_norm(cnts[ix], dl, avgdl)
-        if cand.size > k:
-            kth = np.partition(score, cand.size - k)[cand.size - k]
-            sel = score >= kth
-            cand, ntf, score = cand[sel], ntf[sel], score[sel]
-        order = np.lexsort((cand, -score))[:k]
-        return pd.DataFrame({"doc_id": cand[order].astype(np.int64),
-                             "near_tf": ntf[order].astype(np.int64),
-                             "score": score[order]})
+            return None
+        return np.unique(surv >> _POS_BITS, return_counts=True)
 
-    return run
+    return _positions_kernel(match, "near_tf", uniq_meta, avgdl, k,
+                             docs_per_shard, **gates)
 
 
 def near_search(index, query: str, window: int = 5,
@@ -733,55 +660,16 @@ def near_search(index, query: str, window: int = 5,
     SpanNearQuery(inOrder=false) analog; ordered proximity is
     phrase_search(slop=...). Requires build_positions.
 
-    Same plan shape as phrase_search: term-pruned positions scan ->
-    per-shard numpy kernel -> tiny top-k."""
-    from irkit_spark.operators.query import _docs_touched
-    from irkit_spark.operators.segments import SegmentedIndex
-    if isinstance(index, SegmentedIndex):
-        raise ValueError("near retrieval reads the positions artifact "
-                         "— merge_indexes the segments first")
-    spark = index.spark
-    empty = spark.createDataFrame([], NEAR_SCHEMA)
+    Same plan as phrase_search (_positions_search): term-pruned
+    positions scan -> per-shard numpy kernel -> tiny top-k."""
     toks = tokenize(query)
     if len(toks) != 2 or toks[0] == toks[1]:
         raise ValueError("near_search takes exactly two distinct "
                          f"terms, got {toks!r}")
-    if not has_positions(index):
-        raise ValueError(f"index at {index.path} has no positions/ "
-                         "artifact — run build_positions first")
-    if index.docs_per_shard >= (1 << 30):
-        raise ValueError("near kernel packs doc-local ids into int64 "
-                         "keys: docs_per_shard must be < 2^30")
     if not (1 <= window < (1 << 30)):
         raise ValueError("window must be a small positive int")
-    qmeta = index.lookup_query(" ".join(toks))
-    if len(qmeta) < 2:
-        return empty            # an OOV term: no doc can match
-    td = index._terms_dict()
-    if td is not None:
-        by_term = {t: td[t][0] for t in set(toks)}
-    else:
-        by_term = {r["term"]: int(r["term_id"]) for r in
-                   index.terms.filter(
-                       F.col("term").isin(sorted(set(toks))))
-                   .select("term", "term_id").collect()}
-    tid_a, tid_b = by_term[toks[0]], by_term[toks[1]]
-    qpos = read_positions(spark, index.path).filter(
-        F.col("term_id").isin(sorted({tid_a, tid_b})))
-    has_del = index.has_deletions()
-    del_bc = index.deletions_broadcast() if has_del else None
-    del_over_gate = has_del and del_bc is None
-    dl_bc = None if del_over_gate else index.doc_len_broadcast()
-    kern = _near_kernel(tid_a, tid_b, qmeta, index.avgdl, k,
-                        index.docs_per_shard, window, dl_bc=dl_bc,
-                        del_bc=del_bc, restrict=del_over_gate)
-    if dl_bc is not None:
-        out = (qpos.groupBy("partition_id")
-               .applyInPandas(lambda pdf: kern(pdf), NEAR_SCHEMA))
-    else:
-        qdocs = _docs_touched(index, qpos,
-                              exclude_deleted=del_over_gate)
-        out = (qpos.groupBy("partition_id")
-               .cogroup(qdocs.groupBy("partition_id"))
-               .applyInPandas(lambda lt, rt: kern(lt, rt), NEAR_SCHEMA))
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _positions_search(
+        index, toks, "near", NEAR_SCHEMA, k,
+        lambda qmeta, tids, **gates: _near_kernel(
+            tids[0], tids[1], qmeta, index.avgdl, k,
+            index.docs_per_shard, window, **gates))

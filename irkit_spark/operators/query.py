@@ -7,11 +7,17 @@ operators/build.py.
 
 Query lifecycle (SURVEY.md §3.2): driver tokenizes the query with the
 frozen tokenizer and looks term ids/idfs up in `terms` (tiny filtered
-collect, Q6) -> `postings.filter(term_id isin q)` (partition/row-group
-pruning; untouched shards never read) -> per-shard kernel via
-cogrouped applyInPandas(postings-by-shard, docs-by-shard): decode,
-merge, score, local top-k -> global orderBy(score desc, doc_id).limit(k)
-over <= k * n_shards candidate rows. No wide shuffle at query time.
+collect, Q6; query_meta folds in the ^ boosts) ->
+`postings.filter(term_id isin q)` (partition/row-group pruning;
+untouched shards never read) -> per-shard kernel: decode, merge, score,
+local top-k -> global top-k by (score desc, doc_id) over
+<= k * n_shards candidate rows. No wide shuffle at query time.
+
+Every kernel-mode operator (search, batch_search, selective, tiered,
+phrase, near) takes its serving decisions from serving_gates (doc
+lengths broadcast or cogrouped; tombstones masked or anti-joined),
+shard_plan (the per-shard applyInPandas or cogroup) and, when it
+collects, merge_topk (the driver-side (-score, doc_id) merge).
 
 Determinism / rank-identity (BASELINE.json:14): every path accumulates a
 doc's score over its query terms in ascending term_id order starting
@@ -53,16 +59,6 @@ TOPK_SCHEMA = "doc_id long, score double"
 # (|queries| * k * n_shards upper bound) the per-query top-k merge
 # stays a distributed window instead of a driver collect
 _BATCH_DRIVER_MAX = 2_000_000
-
-
-def _topk_struct():
-    """StructType twin of TOPK_SCHEMA: pandas input + a DDL-string
-    schema takes createDataFrame's row-wise fallback; the StructType
-    form keeps the Arrow fast path (driver-serving latency)."""
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-    return StructType([StructField("doc_id", LongType()),
-                       StructField("score", DoubleType())])
 
 
 class Index:
@@ -345,6 +341,64 @@ def _decode_row_blocks(blocks, codec: str):
     return docs, tfs
 
 
+def topk_frame(doc: np.ndarray, score: np.ndarray, k: int,
+               **extra: np.ndarray) -> pd.DataFrame:
+    """In-task top-k by (-score, doc_id): (doc_id, *extra, score)."""
+    if doc.size > k:
+        # keep every doc tied with the k-th best score so the
+        # doc_id tie-break below stays exact, then sort the subset
+        kth = np.partition(score, doc.size - k)[doc.size - k]
+        keep = score >= kth
+        doc, score = doc[keep], score[keep]
+        extra = {c: v[keep] for c, v in extra.items()}
+    order = np.lexsort((doc, -score))[:k]
+    return pd.DataFrame({"doc_id": doc[order].astype(np.int64),
+                         **{c: v[order].astype(np.int64)
+                            for c, v in extra.items()},
+                         "score": score[order]})
+
+
+def shard_doc_lengths(shard: int, docs_per_shard: int, dl_bc, docs_pdf,
+                      restrict: bool = False, del_bc=None):
+    """Per-shard kernel head: (doc lengths by doc-local id, from dl_bc
+    or the cogrouped docs side; selection mask or None), or None when
+    the shard has no docs. restrict selects only the docs-side docs;
+    del_bc masks the shard's tombstones."""
+    base = shard * docs_per_shard
+    valid = None
+    if dl_bc is not None:
+        if restrict:
+            # the predicate is evaluated on the cogrouped docs side; a
+            # broadcast-dl caller has no docs side to restrict by
+            raise ValueError(
+                "restrict=True requires the cogrouped docs path "
+                "(dl_bc must be None)")
+        got = dl_bc.value.get(shard)
+        if got is None:
+            # shard absent from the docs table (corrupt or hand-merged
+            # index): the cogroup path gets an empty docs side and
+            # returns empty — match it instead of scoring with dl=0
+            # (ADVICE r3)
+            return None
+        dl_arr = got.astype(np.float64)
+    else:
+        if docs_pdf is None or docs_pdf.empty:
+            return None
+        dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
+        d_ids = docs_pdf["doc_id"].to_numpy() - base
+        dl_arr[d_ids] = docs_pdf["doc_len"].to_numpy()
+        if restrict:
+            valid = np.zeros(docs_per_shard, dtype=bool)
+            valid[d_ids] = True
+    if del_bc is not None:
+        dels = del_bc.value.get(shard)
+        if dels is not None and dels.size:
+            if valid is None:
+                valid = np.ones(docs_per_shard, dtype=bool)
+            valid[dels - base] = False
+    return dl_arr, valid
+
+
 def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
                   docs_per_shard: int, mode: str, scorer: str = "bm25",
                   coll_len: int = 1, bound_slack: float = 1.0,
@@ -464,17 +518,6 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
                                                  + mu)
         return scores
 
-    def topk_frame(doc: np.ndarray, score: np.ndarray) -> pd.DataFrame:
-        if doc.size > k:
-            # keep every doc tied with the k-th best score so the
-            # doc_id tie-break below stays exact, then sort the subset
-            kth = np.partition(score, doc.size - k)[doc.size - k]
-            keep = score >= kth
-            doc, score = doc[keep], score[keep]
-        order = np.lexsort((doc, -score))[:k]
-        return pd.DataFrame({"doc_id": doc[order].astype(np.int64),
-                             "score": score[order]})
-
     def run(post_pdf: pd.DataFrame,
             docs_pdf: pd.DataFrame | None = None,
             theta0: float = -np.inf,
@@ -493,38 +536,11 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
             return empty_out
         shard = int(post_pdf["partition_id"].iloc[0])
         base = shard * docs_per_shard
-        if dl_bc is not None:
-            got = dl_bc.value.get(shard)
-            if got is None:
-                # shard absent from the docs table (corrupt or
-                # hand-merged index): the cogroup path gets an empty
-                # docs side and returns empty — match it instead of
-                # scoring with dl=0 (ADVICE r3)
-                return empty_out
-            dl_arr = got.astype(np.float64)
-        else:
-            if docs_pdf is None or docs_pdf.empty:
-                return empty_out
-            dl_arr = np.zeros(docs_per_shard, dtype=np.float64)
-            d_ids = docs_pdf["doc_id"].to_numpy() - base
-            dl_arr[d_ids] = docs_pdf["doc_len"].to_numpy()
-        valid = None
-        if restrict:
-            if dl_bc is not None:
-                # the predicate is evaluated on the cogrouped docs
-                # side; a broadcast-dl caller has no docs side to
-                # restrict by — fail loudly instead of NameError
-                raise ValueError(
-                    "restrict=True requires the cogrouped docs path "
-                    "(dl_bc must be None)")
-            valid = np.zeros(docs_per_shard, dtype=bool)
-            valid[d_ids] = True
-        if del_bc is not None:
-            dels = del_bc.value.get(shard)
-            if dels is not None and dels.size:
-                if valid is None:
-                    valid = np.ones(docs_per_shard, dtype=bool)
-                valid[dels - base] = False
+        head = shard_doc_lengths(shard, docs_per_shard, dl_bc, docs_pdf,
+                                 restrict, del_bc)
+        if head is None:
+            return empty_out
+        dl_arr, valid = head
         term_rows: dict[int, list] = {}
         # iterrows is safe ONLY because post_pdf holds one row per
         # (query term, shard) PER SEGMENT — a handful of rows, each
@@ -577,9 +593,7 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
             # (block cache makes that nearly free).
             if len(term_rows) < nq:
                 # some query term has no postings in this shard at all
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"),
-                     "score": pd.Series([], dtype="float64")})
+                return empty_out
             order = sorted(term_rows,
                            key=lambda t: sum(b["n"] for b in term_rows[t]))
             cand = None
@@ -613,13 +627,11 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
             if cand is not None and cand.size and valid is not None:
                 cand = cand[valid[cand - base]]
             if cand is None or cand.size == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"),
-                     "score": pd.Series([], dtype="float64")})
+                return empty_out
             # exact_scores is scorer-aware (bm25/ql/jm/quantized) and
             # reuses the blocks this loop already decoded via `cache`
             sc = exact_scores(term_rows, cand, dl_arr, base, cache)
-            return topk_frame(cand, sc)
+            return topk_frame(cand, sc, k)
 
         if mode == "daat":       # exhaustive, Q4
             # dense per-shard accumulator; adds happen per term in
@@ -651,7 +663,7 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
             sc = acc[idxs]
             if scorer == "ql":
                 sc = sc + ql_K - nq * np.log(dl_arr[idxs] + mu)
-            return topk_frame(idxs + base, sc)
+            return topk_frame(idxs + base, sc, k)
 
         # mode in ("wand", "maxscore"): two-phase lossless dynamic
         # pruning, Q5 — shared block metadata + theta seeding, then
@@ -752,7 +764,7 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
             if valid is not None:
                 cand = cand[valid[cand - base]]
             sc = exact_scores(term_rows, cand, dl_arr, base, cache)
-            return topk_frame(cand, sc)
+            return topk_frame(cand, sc, k)
 
         # phase 2: surviving blocks. A block of term t covering doc
         # range [f, l] bounds every doc in it by
@@ -813,7 +825,7 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
 
         # phase 3: exact scores of candidates
         sc = exact_scores(term_rows, cand, dl_arr, base, cache)
-        return topk_frame(cand, sc)
+        return topk_frame(cand, sc, k)
 
     return run
 
@@ -870,15 +882,7 @@ def _search_local(index: Index, qmeta: list[dict], k: int, mode: str,
                     theta = np.partition(
                         all_scores, all_scores.size - k)[
                         all_scores.size - k]
-    if not parts:
-        return index.spark.createDataFrame([], TOPK_SCHEMA)
-    allp = pd.concat(parts, ignore_index=True)
-    doc = allp["doc_id"].to_numpy()
-    sc = allp["score"].to_numpy()
-    order = np.lexsort((doc, -sc))[:k]
-    out = pd.DataFrame({"doc_id": doc[order].astype(np.int64),
-                        "score": sc[order]})
-    return index.spark.createDataFrame(out, _topk_struct())
+    return merge_topk(index.spark, parts, k)
 
 
 def _docs_touched(index: Index, qpost: DataFrame,
@@ -906,6 +910,89 @@ def _docs_touched(index: Index, qpost: DataFrame,
     return (docs.join(F.broadcast(shard_dim), "partition_id",
                       "left_semi")
             .select("partition_id", "doc_id", "doc_len"))
+
+
+def serving_gates(index: Index, with_dl: bool = True,
+                  refuse_over: str | None = None):
+    """(dl_bc, del_bc, del_over_gate). Tombstones are selection-only:
+    at or below DEL_BROADCAST_MAX kernels mask them via del_bc; above
+    it the query cogroups the docs table with them anti-joined out,
+    or raises when the operator passes its name as refuse_over. dl_bc
+    is None above the doc-length cap, over the deletion gate, or with
+    with_dl=False (a doc_filter cogroups anyway)."""
+    has_del = index.has_deletions()
+    del_bc = index.deletions_broadcast() if has_del else None
+    del_over_gate = has_del and del_bc is None
+    if del_over_gate and refuse_over is not None:
+        raise ValueError(
+            f"tombstone set above DEL_BROADCAST_MAX: {refuse_over} "
+            "masks deletions via the broadcast — use search(), which "
+            "anti-joins them on the cogrouped docs path")
+    dl_bc = (index.doc_len_broadcast()
+             if with_dl and not del_over_gate else None)
+    return dl_bc, del_bc, del_over_gate
+
+
+def fits_local(index: Index, n_postings: int,
+               del_over_gate: bool) -> bool:
+    """The driver-kernel gate search(local=None) routes by: the query
+    touches at most LOCAL_QUERY_MAX_POSTINGS postings, doc lengths fit
+    the broadcast cap, and no tombstone set is above the gate."""
+    return (n_postings <= config.LOCAL_QUERY_MAX_POSTINGS
+            and index.n_docs <= index._dl_cap
+            and not del_over_gate)
+
+
+def shard_plan(index: Index, qpost: DataFrame, kern, schema: str,
+               dl_bc, doc_filter: str | None = None,
+               del_over_gate: bool = False) -> DataFrame:
+    """kern over each touched shard of the pruned postings/positions
+    frame: kern(pdf) when doc lengths ride the broadcast (no docs
+    shuffle), else kern(pdf, docs_pdf) cogrouped with the touched
+    docs shards (doc_filter applied, tombstones anti-joined)."""
+    if dl_bc is not None:
+        return (qpost.groupBy("partition_id")
+                .applyInPandas(lambda pdf: kern(pdf), schema))
+    qdocs = _docs_touched(index, qpost, doc_filter,
+                          exclude_deleted=del_over_gate)
+    return (qpost.groupBy("partition_id")
+            .cogroup(qdocs.groupBy("partition_id"))
+            .applyInPandas(lambda lt, rt: kern(lt, rt), schema))
+
+
+def merge_topk(spark: SparkSession, parts: list[pd.DataFrame], k: int,
+               group: str | None = None) -> DataFrame:
+    """Driver-side merge of collected per-shard rows: top k by
+    (-score, doc_id), or k per `group` (a string column). A StructType
+    schema keeps createDataFrame on the Arrow path (a DDL string takes
+    the row-wise fallback)."""
+    from pyspark.sql.types import (DoubleType, LongType, StringType,
+                                   StructField, StructType)
+    fields = [StructField("doc_id", LongType()),
+              StructField("score", DoubleType())]
+    if group is not None:
+        fields.insert(0, StructField(group, StringType()))
+    schema = StructType(fields)
+    parts = [p for p in parts if len(p)]
+    if not parts:
+        return spark.createDataFrame([], schema)
+    allp = pd.concat(parts, ignore_index=True)
+    doc = allp["doc_id"].to_numpy()
+    sc = allp["score"].to_numpy()
+    if group is None:
+        order = np.lexsort((doc, -sc))[:k]
+        out = {"doc_id": doc[order].astype(np.int64), "score": sc[order]}
+    else:
+        g = allp[group].to_numpy()
+        order = np.lexsort((doc, -sc, g))
+        g, doc, sc = g[order], doc[order], sc[order]
+        starts = np.concatenate(([True], g[1:] != g[:-1]))
+        rank = np.arange(g.size) - np.maximum.accumulate(
+            np.where(starts, np.arange(g.size), 0))
+        keep = rank < k
+        out = {group: g[keep], "doc_id": doc[keep].astype(np.int64),
+               "score": sc[keep]}
+    return spark.createDataFrame(pd.DataFrame(out), schema)
 
 
 def _parse_boosts(query: str) -> tuple[str, dict[str, float]]:
@@ -950,6 +1037,28 @@ def _boosted(qmeta: list[dict], boosts: dict[str, float],
                          "linear weight)")
     return [dict(m, idf=m["idf"] * boosts.get(m["term"], 1.0))
             for m in qmeta]
+
+
+def query_meta(index: Index, query: str, scorer: str = "bm25",
+               boosts: dict[str, float] | None = None
+               ) -> tuple[str, list[dict]]:
+    """(query without ^ boosts, boosted qmeta) after checking the
+    scorer. Programmatic `boosts` (prf_search expansion terms) merge
+    with the parsed ^ boosts; conflicts raise."""
+    if scorer not in ("bm25", "ql", "jm"):
+        raise ValueError(f"unknown scorer {scorer!r}: bm25|ql|jm")
+    if scorer in ("ql", "jm") and index.quantized:
+        raise ValueError("quantized indexes store 7-bit impacts, not "
+                         "term frequencies; QL/JM need tf — rebuild "
+                         "with quantize=False")
+    query, parsed = _parse_boosts(query)
+    for t, w in (boosts or {}).items():
+        if w <= 0:
+            raise ValueError(f"boost must be > 0: {t!r}")
+        if parsed.get(t, w) != w:
+            raise ValueError(f"conflicting boosts for term {t!r}")
+        parsed[t] = float(w)
+    return query, _boosted(index.lookup_query(query), parsed, scorer)
 
 
 def search(index: Index, query: str, k: int = 10,
@@ -1002,27 +1111,9 @@ def search(index: Index, query: str, k: int = 10,
     if mode not in ("taat", "daat", "wand", "maxscore", "and"):
         raise ValueError(f"unknown mode {mode!r}: "
                          "taat|daat|wand|maxscore|and")
-    if scorer not in ("bm25", "ql", "jm"):
-        raise ValueError(f"unknown scorer {scorer!r}: bm25|ql|jm")
-    if scorer in ("ql", "jm") and index.quantized:
-        raise ValueError("quantized indexes store 7-bit impacts, not "
-                         "term frequencies; QL/JM need tf — rebuild "
-                         "with quantize=False")
-    spark = index.spark
-    # boosts: programmatic weights (prf_search expansion terms ride
-    # here — no string-formatting round-trip through the ^ syntax);
-    # merged with any parsed ^ boosts, conflicts raise
-    query, parsed = _parse_boosts(query)
-    for t, w in (boosts or {}).items():
-        if w <= 0:
-            raise ValueError(f"boost must be > 0: {t!r}")
-        if parsed.get(t, w) != w:
-            raise ValueError(f"conflicting boosts for term {t!r}")
-        parsed[t] = float(w)
-    qmeta = _boosted(index.lookup_query(query), parsed, scorer)
-    empty = spark.createDataFrame([], TOPK_SCHEMA)
+    query, qmeta = query_meta(index, query, scorer, boosts)
     if not qmeta:
-        return empty
+        return index.spark.createDataFrame([], TOPK_SCHEMA)
     neg_meta: list[dict] = []
     if exclude_terms:
         if "*" in exclude_terms:
@@ -1038,14 +1129,8 @@ def search(index: Index, query: str, k: int = 10,
                 "forbidden at once")
         neg_meta = index.lookup_query(exclude_terms)
     neg_tids = frozenset(m["term_id"] for m in neg_meta)
-
-    # tombstones (operators/delete.py): selection-only, like
-    # doc_filter. Below DEL_BROADCAST_MAX the kernels mask candidates
-    # via the broadcast; above it the query routes through the
-    # cogrouped docs path with the deletions anti-joined out.
-    has_del = index.has_deletions()
-    del_bc = index.deletions_broadcast() if has_del else None
-    del_over_gate = has_del and del_bc is None
+    dl_bc, del_bc, del_over_gate = serving_gates(
+        index, with_dl=doc_filter is None)
 
     if doc_filter is not None:
         if mode == "taat":
@@ -1055,25 +1140,9 @@ def search(index: Index, query: str, k: int = 10,
             raise ValueError("doc_filter runs distributed (the "
                              "predicate is evaluated on the docs "
                              "table); local=True is not available")
-        tids = [m["term_id"] for m in qmeta] + list(neg_tids)
-        qpost = index.postings.filter(F.col("term_id").isin(tids))
-        qdocs = _docs_touched(index, qpost, doc_filter,
-                              exclude_deleted=del_over_gate)
-        kern = _shard_kernel(qmeta, index.avgdl, index.codec, k,
-                             index.docs_per_shard, mode, scorer,
-                             index.coll_len, index.bound_slack,
-                             index.quantized, restrict=True,
-                             del_bc=del_bc, neg_tids=neg_tids)
-        out = (qpost.groupBy("partition_id")
-               .cogroup(qdocs.groupBy("partition_id"))
-               .applyInPandas(lambda lt, rt: kern(lt, rt), TOPK_SCHEMA))
-        return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    if mode != "taat" and local is not False:
-        fits = (sum(m["df"] for m in qmeta + neg_meta)
-                <= config.LOCAL_QUERY_MAX_POSTINGS
-                and index.n_docs <= index._dl_cap
-                and not del_over_gate)
+    elif mode != "taat" and local is not False:
+        fits = fits_local(index, sum(m["df"] for m in qmeta + neg_meta),
+                          del_over_gate)
         if local and not fits:
             raise ValueError(
                 "local=True but the query exceeds the driver-kernel "
@@ -1101,25 +1170,15 @@ def search(index: Index, query: str, k: int = 10,
             qpost.filter(F.col("term_id").isin(pos_tids)),
             k, scorer, neg_docs=neg_docs)
 
-    dl_bc = None if del_over_gate else index.doc_len_broadcast()
     kern = _shard_kernel(qmeta, index.avgdl, index.codec, k,
                          index.docs_per_shard, mode, scorer,
                          index.coll_len, index.bound_slack,
                          index.quantized, dl_bc=dl_bc,
-                         restrict=del_over_gate, del_bc=del_bc,
-                         neg_tids=neg_tids)
-    if dl_bc is not None:
-        # gated fast path: doc lengths ride the one-time broadcast, so
-        # a query is a pruned postings scan + per-shard kernel + tiny
-        # top-k — no docs shuffle, no shard-discovery job
-        local = (qpost.groupBy("partition_id")
-                 .applyInPandas(lambda pdf: kern(pdf), TOPK_SCHEMA))
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    qdocs = _docs_touched(index, qpost, exclude_deleted=del_over_gate)
-    local = (qpost.groupBy("partition_id")
-             .cogroup(qdocs.groupBy("partition_id"))
-             .applyInPandas(lambda lt, rt: kern(lt, rt), TOPK_SCHEMA))
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                         restrict=doc_filter is not None or del_over_gate,
+                         del_bc=del_bc, neg_tids=neg_tids)
+    out = shard_plan(index, qpost, kern, TOPK_SCHEMA, dl_bc, doc_filter,
+                     del_over_gate)
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def batch_search(index: Index, queries: dict[str, str] | list[str],
@@ -1151,10 +1210,8 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
                          f"and, not {mode!r}")
     if isinstance(queries, list):
         queries = {str(i): q for i, q in enumerate(queries)}
-    qmetas = {}
-    for qid, q in queries.items():
-        qq, boosts = _parse_boosts(q)
-        qmetas[qid] = _boosted(index.lookup_query(qq), boosts, scorer)
+    qmetas = {qid: query_meta(index, q, scorer)[1]
+              for qid, q in queries.items()}
     qmetas = {qid: m for qid, m in qmetas.items() if m}
     spark = index.spark
     out_schema = "query_id string, doc_id long, score double"
@@ -1163,16 +1220,15 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     all_tids = sorted({m["term_id"] for qm in qmetas.values()
                        for m in qm})
     qpost = index.postings.filter(F.col("term_id").isin(all_tids))
-    has_del = index.has_deletions()
-    del_bc = index.deletions_broadcast() if has_del else None
-    del_over_gate = has_del and del_bc is None
-    restrict = doc_filter is not None or del_over_gate
-    dl_bc = None if restrict else index.doc_len_broadcast()
+    dl_bc, del_bc, del_over_gate = serving_gates(
+        index, with_dl=doc_filter is None)
     kerns = {qid: _shard_kernel(qm, index.avgdl, index.codec, k,
                                 index.docs_per_shard, mode, scorer,
                                 index.coll_len, index.bound_slack,
                                 index.quantized, dl_bc=dl_bc,
-                                restrict=restrict, del_bc=del_bc)
+                                restrict=(doc_filter is not None
+                                          or del_over_gate),
+                                del_bc=del_bc)
              for qid, qm in qmetas.items()}
     tids_by_qid = {qid: {m["term_id"] for m in qm}
                    for qid, qm in qmetas.items()}
@@ -1189,8 +1245,7 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
         dc: dict = {}
         for qid, kern in kerns.items():
             sub = pdf[pdf["term_id"].isin(tids_by_qid[qid])]
-            r = (kern(sub, decoded_cache=dc) if docs_pdf is None
-                 else kern(sub, docs_pdf, decoded_cache=dc))
+            r = kern(sub, docs_pdf, decoded_cache=dc)
             if len(r):
                 outs.append(r.assign(query_id=qid))
         if not outs:
@@ -1200,16 +1255,8 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
         return pd.concat(outs, ignore_index=True)[
             ["query_id", "doc_id", "score"]]
 
-    if dl_bc is not None:
-        local = (qpost.groupBy("partition_id")
-                 .applyInPandas(lambda pdf: run_all(pdf), out_schema))
-    else:
-        qdocs = _docs_touched(index, qpost, doc_filter,
-                              exclude_deleted=del_over_gate)
-        local = (qpost.groupBy("partition_id")
-                 .cogroup(qdocs.groupBy("partition_id"))
-                 .applyInPandas(lambda lt, rt: run_all(lt, rt),
-                                out_schema))
+    local = shard_plan(index, qpost, run_all, out_schema, dl_bc,
+                       doc_filter, del_over_gate)
     # global k-per-query merge. The shard tasks emit <= k rows per
     # (query, shard), so below _BATCH_DRIVER_MAX candidate rows the
     # merge runs on the driver (the selective/tiered pattern): one
@@ -1218,29 +1265,7 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     # TREC run over 10^4 shards) the distributed window remains.
     n_shards = int(index.stats.get("n_shards", 0) or 0)
     if n_shards and len(qmetas) * k * n_shards <= _BATCH_DRIVER_MAX:
-        pdf = local.toPandas()
-        if not len(pdf):
-            return spark.createDataFrame([], out_schema)
-        qid = pdf["query_id"].to_numpy()
-        doc = pdf["doc_id"].to_numpy()
-        sc_ = pdf["score"].to_numpy()
-        # (query_id asc, score desc, doc_id asc), then k per query
-        order = np.lexsort((doc, -sc_, qid))
-        qid, doc, sc_ = qid[order], doc[order], sc_[order]
-        starts = np.concatenate(([True], qid[1:] != qid[:-1]))
-        rank = np.arange(qid.size) - np.maximum.accumulate(
-            np.where(starts, np.arange(qid.size), 0))
-        keep = rank < k
-        out = pd.DataFrame({"query_id": qid[keep],
-                            "doc_id": doc[keep].astype(np.int64),
-                            "score": sc_[keep]})
-        from pyspark.sql.types import (DoubleType, LongType,
-                                       StringType, StructField,
-                                       StructType)
-        return spark.createDataFrame(out, StructType([
-            StructField("query_id", StringType()),
-            StructField("doc_id", LongType()),
-            StructField("score", DoubleType())]))
+        return merge_topk(spark, [local.toPandas()], k, group="query_id")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.asc("doc_id"))
     return (local.withColumn("__rk", F.row_number().over(w))
@@ -1268,6 +1293,52 @@ def _neg_docs_df(index: Index, neg_tids: frozenset) -> DataFrame:
 
     return (npost.select("blocks")
             .mapInPandas(dec, "doc_id long").distinct())
+
+
+def with_doc_len(index: Index, df: DataFrame) -> DataFrame:
+    """Attach doc_len to a frame of doc_id rows on the SQL-shaped
+    paths (TAAT, synonyms): through the gated per-shard broadcast when
+    it fits (no docs-table shuffle join per query — same gate the
+    kernel modes use), else the docs-table join."""
+    dl_bc = index.doc_len_broadcast()
+    if dl_bc is None:
+        return df.join(index.docs.select("doc_id", "doc_len"), "doc_id")
+    dps = index.docs_per_shard
+
+    @F.pandas_udf("int")
+    def _dl(doc_id: pd.Series) -> pd.Series:
+        # -1 marks docs whose shard is absent from the broadcast; the
+        # filter below drops them, matching the join path's inner-join
+        # semantics instead of scoring with dl=0 (ADVICE r3). A doc
+        # present in the arrays but with dl=0 cannot carry postings
+        # (dl >= tf >= 1), so dl<=0 always means "not in the docs
+        # table".
+        arrs = dl_bc.value
+        d = doc_id.to_numpy()
+        out = np.full(d.size, -1, dtype=np.int32)
+        for s in np.unique(d // dps):
+            m = (d // dps) == s
+            a = arrs.get(int(s))
+            if a is not None:
+                out[m] = a[d[m] - int(s) * dps]
+        return pd.Series(out)
+
+    return (df.withColumn("doc_len", _dl(F.col("doc_id")))
+            .filter(F.col("doc_len") > 0))
+
+
+def anti_join_deleted(index: Index, df: DataFrame) -> DataFrame:
+    """Tombstones out of a per-doc aggregate on the SQL-shaped paths
+    (selection-only: per-doc sums are untouched, so surviving scores
+    are identical with or without the drop — the same contract as the
+    kernel modes' `valid` mask). Anti-join, broadcast when the set
+    fits the gate."""
+    if not index.has_deletions():
+        return df
+    dels = index.deletions_df().select("doc_id")
+    if index.deletions_broadcast() is not None:
+        dels = F.broadcast(dels)
+    return df.join(dels, "doc_id", "left_anti")
 
 
 def _taat_from_index(index: Index, qmeta, qpost: DataFrame,
@@ -1365,49 +1436,12 @@ def _taat_from_index(index: Index, qmeta, qpost: DataFrame,
         flat = qpost.mapInPandas(decode_partials,
                                  "doc_id long, term_id int, tf long")
 
-    def with_doc_len(df: DataFrame) -> DataFrame:
-        """Attach doc_len: through the gated per-shard broadcast when
-        it fits (no docs-table shuffle join per query — same gate the
-        DAAT/WAND kernels use), else the cogrouped join."""
-        dl_bc = index.doc_len_broadcast()
-        if dl_bc is None:
-            return df.join(index.docs.select("doc_id", "doc_len"),
-                           "doc_id")
-
-        @F.pandas_udf("int")
-        def _dl(doc_id: pd.Series) -> pd.Series:
-            # -1 marks docs whose shard is absent from the broadcast;
-            # the filter below drops them, matching the join path's
-            # inner-join semantics instead of scoring with dl=0
-            # (ADVICE r3). A doc present in the arrays but with dl=0
-            # cannot carry postings (dl >= tf >= 1), so dl<=0 always
-            # means "not in the docs table".
-            arrs = dl_bc.value
-            d = doc_id.to_numpy()
-            out = np.full(d.size, -1, dtype=np.int32)
-            for s in np.unique(d // dps):
-                m = (d // dps) == s
-                a = arrs.get(int(s))
-                if a is not None:
-                    out[m] = a[d[m] - int(s) * dps]
-            return pd.Series(out)
-
-        return (df.withColumn("doc_len", _dl(F.col("doc_id")))
-                .filter(F.col("doc_len") > 0))
     def drop_deleted(df: DataFrame) -> DataFrame:
-        """Tombstones (and exclude_terms docs) out AFTER the per-doc
-        aggregate (selection-only: per-doc sums are untouched, so
-        surviving scores are identical with or without the drop — the
-        same contract as the kernel modes' `valid` mask). Anti-join,
-        broadcast when the set fits the gate."""
+        # exclude_terms docs out AFTER the per-doc aggregate, like the
+        # tombstones (selection-only)
         if neg_docs is not None:
             df = df.join(neg_docs, "doc_id", "left_anti")
-        if not index.has_deletions():
-            return df
-        dels = index.deletions_df().select("doc_id")
-        if index.deletions_broadcast() is not None:
-            dels = F.broadcast(dels)
-        return df.join(dels, "doc_id", "left_anti")
+        return anti_join_deleted(index, df)
 
     if scorer == "ql":
         nq = len(qmeta)
@@ -1417,7 +1451,7 @@ def _taat_from_index(index: Index, qmeta, qpost: DataFrame,
         # the per-doc adjustment joins doc_len AFTER the aggregate —
         # distinct docs only
         return (drop_deleted(with_doc_len(
-                    flat.groupBy("doc_id")
+                    index, flat.groupBy("doc_id")
                     .agg(F.sum("partial").alias("s"))))
                 .withColumn("score",
                             F.col("s") + ql_k
@@ -1432,7 +1466,7 @@ def _taat_from_index(index: Index, qmeta, qpost: DataFrame,
         p_df = index.spark.createDataFrame(
             [(m["term_id"], p_by_tid[m["term_id"]]) for m in qmeta],
             "term_id int, p double")
-        scored = (with_doc_len(flat)
+        scored = (with_doc_len(index, flat)
                   .join(F.broadcast(p_df), "term_id")
                   .withColumn("partial",
                               F.log1p(jm_c * F.col("tf")
@@ -1443,7 +1477,7 @@ def _taat_from_index(index: Index, qmeta, qpost: DataFrame,
         idf_df = index.spark.createDataFrame(
             [(m["term_id"], m["idf"]) for m in qmeta],
             "term_id int, idf double")
-        scored = (with_doc_len(flat)
+        scored = (with_doc_len(index, flat)
                   .join(F.broadcast(idf_df), "term_id")
                   .withColumn("partial",
                               F.col("idf") * F.col("tf")

@@ -55,11 +55,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from irkit_spark import config
 from irkit_spark.operators.query import (TOPK_SCHEMA, Index,
-                                         _boosted, _docs_touched,
-                                         _parse_boosts, _shard_kernel,
-                                         _topk_struct)
+                                         _shard_kernel, merge_topk,
+                                         query_meta, serving_gates,
+                                         shard_plan)
 
 # relative slack on the UB >= theta escalation compare (see module doc)
 _ESCALATE_EPS = 1e-9
@@ -164,33 +163,29 @@ def shard_bounds(index: Index, qmeta: list[dict]) -> list[tuple[int, float]]:
     return out
 
 
-def _run_shards(index: Index, qmeta: list[dict], shard_ids: list[int],
-                k: int, mode: str, theta0: float,
-                del_bc) -> pd.DataFrame:
-    """Per-shard kernel over exactly `shard_ids` (partition-pruned
-    scan), carried threshold theta0; returns the collected <= k-per-
-    shard candidate rows for the driver-side global merge."""
-    tids = [m["term_id"] for m in qmeta]
-    qpost = (index.postings
-             .filter(F.col("term_id").isin(tids))
-             .filter(F.col("partition_id").isin(
-                 [int(s) for s in shard_ids])))
-    dl_bc = index.doc_len_broadcast()
+def _run_shards(index: Index, qmeta: list[dict], k: int, mode: str,
+                theta0: float, gates: tuple, scorer: str = "bm25",
+                post: DataFrame | None = None,
+                shards: list[int] | None = None) -> pd.DataFrame:
+    """One top-k kernel pass with a carried threshold theta0 over a
+    POSTINGS_SCHEMA frame (`post`, default the full postings),
+    partition-pruned to `shards` when given; returns the collected
+    <= k-per-shard candidate rows for the driver-side global merge.
+    `gates` is serving_gates' triple."""
+    dl_bc, del_bc, _ = gates
+    post = index.postings if post is None else post
+    qpost = post.filter(F.col("term_id").isin(
+        [m["term_id"] for m in qmeta]))
+    if shards is not None:
+        qpost = qpost.filter(F.col("partition_id").isin(
+            [int(s) for s in shards]))
     kern = _shard_kernel(qmeta, index.avgdl, index.codec, k,
-                         index.docs_per_shard, mode, "bm25",
+                         index.docs_per_shard, mode, scorer,
                          index.coll_len, index.bound_slack,
                          index.quantized, dl_bc=dl_bc, del_bc=del_bc)
-    if dl_bc is not None:
-        out = qpost.groupBy("partition_id").applyInPandas(
-            lambda pdf: kern(pdf, theta0=theta0), TOPK_SCHEMA)
-    else:
-        qdocs = _docs_touched(index, qpost)
-        out = (qpost.groupBy("partition_id")
-               .cogroup(qdocs.groupBy("partition_id"))
-               .applyInPandas(lambda lt, rt: kern(lt, rt,
-                                                  theta0=theta0),
-                              TOPK_SCHEMA))
-    return out.toPandas()
+    return shard_plan(index, qpost,
+                      lambda *sides: kern(*sides, theta0=theta0),
+                      TOPK_SCHEMA, dl_bc).toPandas()
 
 
 def selective_search(index: Index, query: str, k: int = 10,
@@ -218,34 +213,17 @@ def selective_search(index: Index, query: str, k: int = 10,
                          "wand|maxscore")
     if m0 < 1:
         raise ValueError("m0 must be >= 1")
-    spark = index.spark
-    query, parsed = _parse_boosts(query)
-    for t, w in (boosts or {}).items():
-        if w <= 0:
-            raise ValueError(f"boost must be > 0: {t!r}")
-        if parsed.get(t, w) != w:
-            raise ValueError(f"conflicting boosts for term {t!r}")
-        parsed[t] = float(w)
-    qmeta = _boosted(index.lookup_query(query), parsed, "bm25")
-    empty = spark.createDataFrame([], TOPK_SCHEMA)
+    _, qmeta = query_meta(index, query, "bm25", boosts)
     if not qmeta:
-        return empty
-    del_bc = None
-    if index.has_deletions():
-        del_bc = index.deletions_broadcast()
-        if del_bc is None:
-            raise ValueError(
-                "tombstone set above DEL_BROADCAST_MAX: selective "
-                "search masks deletions via the broadcast — use "
-                "search(), which anti-joins them on the cogrouped "
-                "docs path")
+        return merge_topk(index.spark, [], k)
+    gates = serving_gates(index, refuse_over="selective search")
 
     bounds = shard_bounds(index, qmeta)
     if not bounds:
-        return empty
+        return merge_topk(index.spark, [], k)
     phase1 = [s for s, _ in bounds[:m0]]
-    rows = _run_shards(index, qmeta, phase1, k, mode,
-                       theta0=-np.inf, del_bc=del_bc)
+    rows = _run_shards(index, qmeta, k, mode, -np.inf, gates,
+                       shards=phase1)
     theta = -np.inf
     if len(rows) >= k:
         sc = rows["score"].to_numpy()
@@ -254,20 +232,13 @@ def selective_search(index: Index, query: str, k: int = 10,
     rest = bounds[m0:]
     escalate = [s for s, ub in rest
                 if ub >= theta - _ESCALATE_EPS * abs(theta)]
+    parts = [rows]
     if escalate:
-        rows2 = _run_shards(index, qmeta, escalate, k, mode,
-                            theta0=theta, del_bc=del_bc)
-        rows = pd.concat([rows, rows2], ignore_index=True)
+        parts.append(_run_shards(index, qmeta, k, mode, theta, gates,
+                                 shards=escalate))
     if stats is not None:
         stats.update({"shards_total": len(bounds),
                       "shards_phase1": len(phase1),
                       "shards_phase2": len(escalate),
                       "theta": theta})
-    if rows.empty:
-        return empty
-    doc = rows["doc_id"].to_numpy()
-    sc = rows["score"].to_numpy()
-    order = np.lexsort((doc, -sc))[:k]
-    out = pd.DataFrame({"doc_id": doc[order].astype(np.int64),
-                        "score": sc[order]})
-    return spark.createDataFrame(out, _topk_struct())
+    return merge_topk(index.spark, parts, k)

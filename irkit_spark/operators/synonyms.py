@@ -12,12 +12,13 @@ SynonymQuery's "as if one term with summed tf" contract). Ranked by
 
 Scale shape: one term-pruned postings scan per pass, decoded to
 (doc_id, gid, tf) int rows in an Arrow kernel; tf-sum is a partial
-aggregate; doc lengths attach through the same gated per-shard
-broadcast the TAAT path uses (no docs-table shuffle join per query
-below the gate). The union-df pass is a second decode of the MEMBER
-postings only (query-bounded) — df_g is genuinely a distinct-doc
-count, not derivable from stored stats. Tombstones anti-join after
-the per-doc aggregate (selection-only, the repo's standard contract).
+aggregate; doc lengths attach through query.with_doc_len, the gated
+per-shard broadcast the TAAT path uses (no docs-table shuffle join per
+query below the gate). The union-df pass is a second decode of the
+MEMBER postings only (query-bounded) — df_g is genuinely a
+distinct-doc count, not derivable from stored stats. Tombstones
+anti-join after the per-doc aggregate (query.anti_join_deleted:
+selection-only, the repo's standard contract).
 """
 
 from __future__ import annotations
@@ -30,7 +31,8 @@ from pyspark.sql import functions as F
 from irkit_spark import config
 from irkit_spark.functions.scoring import idf as idf_fn
 from irkit_spark.functions.tokenize import tokenize
-from irkit_spark.operators.query import Index, _decode_row_blocks
+from irkit_spark.operators.query import (Index, _decode_row_blocks,
+                                         anti_join_deleted, with_doc_len)
 
 
 def search_synonyms(index: Index, groups: list[list[str]],
@@ -94,41 +96,13 @@ def search_synonyms(index: Index, groups: list[list[str]],
                              sorted(idf_by_gid.items())
                              for x in (g, v)])
 
-    scored = _with_doc_len(index, gt)
+    scored = with_doc_len(index, gt)
     k1, b = config.BM25_K1, config.BM25_B
     sat = F.col("tfg") / (F.col("tfg") + F.lit(k1) * (
         F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(index.avgdl)))
     per = (idf_map[F.col("gid")] * sat).alias("contrib")
     out = (scored.select("doc_id", per)
            .groupBy("doc_id").agg(F.sum("contrib").alias("score")))
-    if index.has_deletions():
-        dels = index.deletions_df().select("doc_id")
-        if index.deletions_broadcast() is not None:
-            dels = F.broadcast(dels)
-        out = out.join(dels, "doc_id", "left_anti")
-    return out.orderBy(F.desc("score"), "doc_id").limit(k)
+    return (anti_join_deleted(index, out)
+            .orderBy(F.desc("score"), "doc_id").limit(k))
 
-
-def _with_doc_len(index: Index, df: DataFrame) -> DataFrame:
-    """doc_len via the gated per-shard broadcast (the TAAT path's
-    contract: dl <= 0 means 'not in the docs table' — inner-join
-    semantics), else the docs-table join."""
-    dl_bc = index.doc_len_broadcast()
-    if dl_bc is None:
-        return df.join(index.docs.select("doc_id", "doc_len"), "doc_id")
-    dps = index.docs_per_shard
-
-    @F.pandas_udf("int")
-    def _dl(doc_id: pd.Series) -> pd.Series:
-        arrs = dl_bc.value
-        d = doc_id.to_numpy()
-        out = np.full(d.size, -1, dtype=np.int32)
-        for s in np.unique(d // dps):
-            m = (d // dps) == s
-            a = arrs.get(int(s))
-            if a is not None:
-                out[m] = a[d[m] - int(s) * dps]
-        return pd.Series(out)
-
-    return (df.withColumn("doc_len", _dl(F.col("doc_id")))
-            .filter(F.col("doc_len") > 0))

@@ -57,15 +57,14 @@ handling).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from irkit_spark import config
-from irkit_spark.operators.query import (TOPK_SCHEMA, Index, _boosted,
-                                         _docs_touched, _parse_boosts,
-                                         _shard_kernel, _topk_struct)
-from irkit_spark.operators.selective import _ESCALATE_EPS, shard_bounds
+from irkit_spark.operators.query import (Index, merge_topk, query_meta,
+                                         serving_gates)
+from irkit_spark.operators.selective import (_ESCALATE_EPS, _run_shards,
+                                             shard_bounds)
 
 TIER_NAME = "postings_tier"
 
@@ -150,32 +149,6 @@ def _tier_df(index: Index):
                          POSTINGS_SCHEMA, index._fmt)
 
 
-def _kernel_pass(index: Index, qmeta: list[dict], post_df: DataFrame,
-                 k: int, mode: str, theta0: float,
-                 del_bc, scorer: str = "bm25") -> pd.DataFrame:
-    """One top-k kernel pass over an arbitrary POSTINGS_SCHEMA frame
-    (the tier, or the shard-filtered full postings), threshold carried;
-    collected <= k-per-shard candidate rows."""
-    tids = [m["term_id"] for m in qmeta]
-    qpost = post_df.filter(F.col("term_id").isin(tids))
-    dl_bc = index.doc_len_broadcast()
-    kern = _shard_kernel(qmeta, index.avgdl, index.codec, k,
-                         index.docs_per_shard, mode, scorer,
-                         index.coll_len, index.bound_slack,
-                         index.quantized, dl_bc=dl_bc, del_bc=del_bc)
-    if dl_bc is not None:
-        out = qpost.groupBy("partition_id").applyInPandas(
-            lambda pdf: kern(pdf, theta0=theta0), TOPK_SCHEMA)
-    else:
-        qdocs = _docs_touched(index, qpost)
-        out = (qpost.groupBy("partition_id")
-               .cogroup(qdocs.groupBy("partition_id"))
-               .applyInPandas(lambda lt, rt: kern(lt, rt,
-                                                  theta0=theta0),
-                              TOPK_SCHEMA))
-    return out.toPandas()
-
-
 def tiered_search(index: Index, query: str, k: int = 10,
                   mode: str = "wand", scorer: str = "bm25",
                   boosts: dict[str, float] | None = None,
@@ -212,33 +185,10 @@ def tiered_search(index: Index, query: str, k: int = 10,
         raise ValueError(f"unknown mode {mode!r}: tiered search runs "
                          "the threshold-carrying kernels — "
                          "wand|maxscore")
-    if scorer not in ("bm25", "ql", "jm"):
-        raise ValueError(f"unknown scorer {scorer!r}: bm25|ql|jm")
-    if scorer in ("ql", "jm") and index.quantized:
-        raise ValueError("quantized indexes store 7-bit impacts, not "
-                         "term frequencies; QL/JM need tf — rebuild "
-                         "with quantize=False")
-    spark = index.spark
-    query, parsed = _parse_boosts(query)
-    for t, w in (boosts or {}).items():
-        if w <= 0:
-            raise ValueError(f"boost must be > 0: {t!r}")
-        if parsed.get(t, w) != w:
-            raise ValueError(f"conflicting boosts for term {t!r}")
-        parsed[t] = float(w)
-    qmeta = _boosted(index.lookup_query(query), parsed, scorer)
-    empty = spark.createDataFrame([], TOPK_SCHEMA)
+    _, qmeta = query_meta(index, query, scorer, boosts)
     if not qmeta:
-        return empty
-    del_bc = None
-    if index.has_deletions():
-        del_bc = index.deletions_broadcast()
-        if del_bc is None:
-            raise ValueError(
-                "tombstone set above DEL_BROADCAST_MAX: tiered search "
-                "masks deletions via the broadcast in both phases — "
-                "use search(), which anti-joins them on the cogrouped "
-                "docs path")
+        return merge_topk(index.spark, [], k)
+    gates = serving_gates(index, refuse_over="tiered search")
 
     tier = _tier_df(index)
     theta = -np.inf
@@ -256,9 +206,8 @@ def tiered_search(index: Index, query: str, k: int = 10,
         _ex.shutdown(wait=False)
     try:
         if tier is not None:
-            rows1 = _kernel_pass(index, qmeta, tier, k, mode,
-                                 theta0=-np.inf, del_bc=del_bc,
-                                 scorer=scorer)
+            rows1 = _run_shards(index, qmeta, k, mode, -np.inf, gates,
+                                scorer, post=tier)
             if len(rows1) >= k:
                 sc = rows1["score"].to_numpy()
                 kth = float(np.partition(sc, sc.size - k)[sc.size - k])
@@ -276,28 +225,19 @@ def tiered_search(index: Index, query: str, k: int = 10,
         # reach theta at all
         bounds = bounds_f.result()
         if not bounds:
-            return empty
+            return merge_topk(index.spark, [], k)
         searched = [s for s, ub in bounds if ub >= theta]
-        phase2_post = index.postings.filter(F.col("partition_id").isin(
-            [int(s) for s in searched]))
         n_total, n_searched = len(bounds), len(searched)
     else:
         # ql/jm: no sound per-shard bound in the artifact — theta
         # still prunes blocks inside every shard
-        phase2_post = index.postings
+        searched = None
         n_total = n_searched = -1
-    rows = _kernel_pass(index, qmeta, phase2_post, k, mode,
-                        theta0=theta, del_bc=del_bc, scorer=scorer)
+    rows = _run_shards(index, qmeta, k, mode, theta, gates, scorer,
+                       shards=searched)
     if stats is not None:
         stats.update({"tier_used": tier is not None,
                       "theta": theta,
                       "shards_total": n_total,
                       "shards_searched": n_searched})
-    if rows.empty:
-        return empty
-    doc = rows["doc_id"].to_numpy()
-    sc = rows["score"].to_numpy()
-    order = np.lexsort((doc, -sc))[:k]
-    out = pd.DataFrame({"doc_id": doc[order].astype(np.int64),
-                        "score": sc[order]})
-    return spark.createDataFrame(out, _topk_struct())
+    return merge_topk(index.spark, [rows], k)

@@ -76,6 +76,25 @@ def test_postings_byte_identical_by_term(spark, compacted_and_fresh):
         _postings_by_term(spark, fresh)
 
 
+def test_compacted_shard_files_in_term_order(spark, compacted_and_fresh):
+    """Every compacted shard file lists its rows in strictly increasing
+    term_id, as a single-shot build's does. The write's
+    sortWithinPartitions does not order the partition_by files, so
+    this pins the compaction kernel's emit order."""
+    import glob
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    comp, _ = compacted_and_fresh
+    files = glob.glob(os.path.join(comp, "postings", "*", "*.parquet"))
+    assert files
+    for f in files:
+        tid = pq.read_table(f, columns=["term_id"]).column(
+            "term_id").to_numpy()
+        assert (np.diff(tid) > 0).all(), f
+
+
 def test_docs_and_stats_equal(spark, compacted_and_fresh):
     comp, fresh = compacted_and_fresh
     a = sorted(map(tuple, Index(spark, comp).docs.collect()))

@@ -64,6 +64,22 @@ def test_explain_boosts_empty_and_bounds(spark, exp_index):
         r["route"] == "local")
 
 
+def test_explain_route_follows_search_gate(spark, exp_index):
+    """route names the path search(local=None) takes, so it applies the
+    whole driver-kernel gate: a handle forced over the doc-length
+    broadcast cap runs distributed however few postings the query
+    touches."""
+    from irkit_spark import config
+    from irkit_spark.operators.query import search
+    forced = Index(spark, exp_index.path, dl_broadcast_max=0)
+    r = explain_query(forced, "alpha gamma")
+    assert r["est_postings"] <= config.LOCAL_QUERY_MAX_POSTINGS
+    assert r["route"] == "distributed"
+    with pytest.raises(ValueError, match="driver-kernel gate"):
+        search(forced, "alpha gamma", 10, local=True)
+    assert explain_query(exp_index, "alpha gamma")["route"] == "local"
+
+
 def test_explain_sees_fresh_then_stale_artifacts(spark, exp_index):
     import os
     import time

@@ -374,6 +374,29 @@ def test_near_matches_bruteforce(pos_index, q, window):
     assert got == want, (q, window)
 
 
+def test_positions_cogroup_path_identical(spark, pos_index):
+    """phrase_search (slop 0 and > 0) and near_search on the cogroup
+    side of the doc-length gate (dl_broadcast_max=0) return exactly
+    the broadcast side's rows."""
+    from irkit_spark.operators.positions import near_search
+    idx, _, _ = pos_index
+    slow = Index(spark, idx.path, dl_broadcast_max=0)
+    assert slow.doc_len_broadcast() is None
+    for ph, slop in [("red fox", 0), ("lazy dog", 0), ("red jumps", 1),
+                     ("red over lazy", 2)]:
+        a = [tuple(r) for r in
+             phrase_search(idx, ph, 10, slop=slop).collect()]
+        b = [tuple(r) for r in
+             phrase_search(slow, ph, 10, slop=slop).collect()]
+        assert a == b and a, (ph, slop)
+    for q, window in [("red dog", 6), ("fox lazy", 4)]:
+        a = [tuple(r) for r in
+             near_search(idx, q, window=window).collect()]
+        b = [tuple(r) for r in
+             near_search(slow, q, window=window).collect()]
+        assert a == b and a, (q, window)
+
+
 def test_near_guards(pos_index):
     from irkit_spark.operators.positions import near_search
     idx, _, _ = pos_index

@@ -254,6 +254,50 @@ def test_dl_broadcast_and_cogroup_paths_identical(spark, index_small):
         assert fast == slow and fast
 
 
+def test_batch_search_cogroup_path_identical(spark, index_small):
+    """batch_search on the cogroup side of the doc-length gate
+    (dl_broadcast_max=0) returns exactly the broadcast side's rows."""
+    from irkit_spark.operators.query import Index, batch_search
+    idx_fast, _ = index_small
+    idx_slow = Index(spark, idx_fast.path, dl_broadcast_max=0)
+    assert idx_slow.doc_len_broadcast() is None
+    qs = {"a": "term00000 term00003 term00123",
+          "b": "term00001 term00010",
+          "c": "term00002 term00005 term00050"}
+    for mode in ("wand", "daat", "and"):
+        fast = [tuple(r) for r in
+                batch_search(idx_fast, qs, k=10, mode=mode).collect()]
+        slow = [tuple(r) for r in
+                batch_search(idx_slow, qs, k=10, mode=mode).collect()]
+        assert fast == slow and fast, mode
+
+
+def test_post_cache_eviction(spark, index_small, monkeypatch):
+    """Above Index._POST_CACHE_MAX postings the driver cache drops
+    every term but the current query's: after two local queries on
+    disjoint terms only the second query's terms remain, __n counts
+    exactly their postings, and both results equal the distributed
+    path's."""
+    from irkit_spark.operators.query import Index
+    idx, _ = index_small
+    monkeypatch.setattr(Index, "_post_cache", {})
+    monkeypatch.setattr(Index, "_POST_CACHE_MAX", 1)
+    monkeypatch.setattr(idx, "_post_local", None)
+    q1, q2 = "term00003 term00150", "term00007 term00222"
+    for q in (q1, q2):
+        loc = [(r["doc_id"], r["score"]) for r in
+               search(idx, q, 10, "wand", local=True).collect()]
+        dist = [(r["doc_id"], r["score"]) for r in
+                search(idx, q, 10, "wand", local=False).collect()]
+        assert loc == dist and loc, q
+    key, ver = idx._artifact_key("postings")
+    cache = Index._post_cache[key][1] if ver is not None \
+        else idx._post_local
+    meta2 = idx.lookup_query(q2)
+    assert set(cache) - {"__n"} == {m["term_id"] for m in meta2}
+    assert cache["__n"] == sum(m["df"] for m in meta2)
+
+
 def test_wand_skips_blocks(spark, tmp_path_factory):
     """Pruning evidence: a rare term's narrow doc range prunes the
     stopword's far blocks — the WAND kernel must decode strictly fewer

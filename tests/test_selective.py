@@ -116,6 +116,18 @@ def test_selective_with_deletions(spark, sel_index, tmp_path_factory):
     assert _rows(selective_search(idx, "twin", k=2))[0][0] == 250
 
 
+def test_selective_cogroup_path_identical(spark, sel_index):
+    """selective_search on the cogroup side of the doc-length gate
+    (dl_broadcast_max=0) returns exactly the broadcast side's rows."""
+    slow = Index(spark, sel_index.path, dl_broadcast_max=0)
+    assert slow.doc_len_broadcast() is None
+    for mode in ("wand", "maxscore"):
+        for q in QUERIES:
+            a = _rows(selective_search(sel_index, q, k=10, mode=mode))
+            b = _rows(selective_search(slow, q, k=10, mode=mode))
+            assert a == b, (q, mode)
+
+
 def test_selective_guards(spark, sel_index):
     with pytest.raises(ValueError, match="wand|maxscore"):
         selective_search(sel_index, "jaguar", mode="taat")

@@ -98,6 +98,21 @@ def test_oov_and_guards(syn_index, spark):
         search_synonyms(idx, [["join"]], k=0)
 
 
+def test_cogroup_path_identical(syn_index, spark):
+    """search_synonyms with doc lengths from the docs-table join
+    (dl_broadcast_max=0) returns exactly the broadcast side's rows."""
+    _, idx = syn_index
+    slow = Index(spark, idx.path, dl_broadcast_max=0)
+    assert slow.doc_len_broadcast() is None
+    for groups in ([["join", "merge"], ["hash"], ["scan", "filter"]],
+                   [["sort", "probe", "spill"]]):
+        a = [tuple(r) for r in
+             search_synonyms(idx, groups, k=10).collect()]
+        b = [tuple(r) for r in
+             search_synonyms(slow, groups, k=10).collect()]
+        assert a == b and a, groups
+
+
 def test_deletions_respected(syn_index, spark, tmp_path):
     import shutil as sh
     rows, idx = syn_index

@@ -172,6 +172,19 @@ def test_tiered_with_deletions(spark, tier_index, tmp_path_factory):
                _rows(tiered_search(idx, "jaguar speed", k=10)))
 
 
+def test_tiered_cogroup_path_identical(spark, tier_index):
+    """tiered_search on the cogroup side of the doc-length gate
+    (dl_broadcast_max=0) returns exactly the broadcast side's rows, in
+    both phases and for every scorer."""
+    slow = Index(spark, tier_index.path, dl_broadcast_max=0)
+    assert slow.doc_len_broadcast() is None
+    for scorer in ("bm25", "ql"):
+        for q in QUERIES:
+            a = _rows(tiered_search(tier_index, q, k=10, scorer=scorer))
+            b = _rows(tiered_search(slow, q, k=10, scorer=scorer))
+            assert a == b, (q, scorer)
+
+
 def test_tiered_boosts_empty_and_guards(spark, tier_index):
     a = _rows(tiered_search(tier_index, "jaguar^2 speed", k=10))
     b = _rows(search(tier_index, "jaguar^2 speed", k=10, mode="wand",
