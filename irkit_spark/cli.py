@@ -80,9 +80,11 @@ def cmd_query(args):
     spark = _session("irkit-query")
     idx = Index(spark, args.index)
     if args.queries_file:
-        # whole TREC run in ONE distributed pass (batch_search): all
-        # queries' terms prune one postings scan — per-query jobs would
-        # cost a fixed ~1-2s of scheduling each
+        # whole TREC run in one batch_search call: on the driver
+        # kernel when the set's summed df fits the search(local=None)
+        # gate and there is no --doc-filter, else one distributed pass
+        # where all queries' terms prune one postings scan (per-query
+        # jobs would cost a fixed ~1-2s of scheduling each)
         queries = _read_queries_file(args.queries_file)
         rows = batch_search(idx, queries, k=args.k, mode=args.mode,
                             scorer=args.scorer,
@@ -477,8 +479,9 @@ def main(argv=None):
     g.add_argument("--query")
     g.add_argument("--queries-file", dest="queries_file",
                    help="TREC run over a query file ('qid<TAB>text' or "
-                        "bare text per line) in one distributed pass "
-                        "(batch_search); modes: daat/wand/maxscore/and")
+                        "bare text per line) in one batch_search call "
+                        "(driver kernel or one distributed pass); "
+                        "modes: daat/wand/maxscore/and")
     q.add_argument("--k", type=int, default=10)
     q.add_argument("--mode", default="wand",
                    choices=["taat", "daat", "wand", "maxscore", "and"])

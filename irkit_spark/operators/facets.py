@@ -16,7 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from irkit_spark.operators.query import Index, _decode_row_blocks
+from irkit_spark.operators.query import (Index, _decode_row_blocks,
+                                         anti_join_deleted)
 
 
 def _match_docs(index: Index, tids: list[int],
@@ -66,13 +67,9 @@ def facet_counts(index: Index, query: str, docs_df: DataFrame,
             [], "facet string, n_docs long")
     matches = _match_docs(index, [m["term_id"] for m in qmeta],
                           conjunctive)
-    if index.has_deletions():
-        # tombstones are selection-only everywhere else (search,
-        # phrase, snippets) — the facet counts must agree
-        dels = index.deletions_df().select("doc_id")
-        if index.deletions_broadcast() is not None:
-            dels = F.broadcast(dels)
-        matches = matches.join(dels, "doc_id", "left_anti")
+    # tombstones are selection-only everywhere else (search, phrase,
+    # snippets) — the facet counts must agree
+    matches = anti_join_deleted(index, matches)
     if exclude_terms:
         neg = index.lookup_query(exclude_terms)
         if neg:
@@ -115,11 +112,7 @@ def facet_ranges(index: Index, query: str, docs_df: DataFrame,
         return index.spark.createDataFrame([], empty)
     matches = _match_docs(index, [m["term_id"] for m in qmeta],
                           conjunctive)
-    if index.has_deletions():
-        dels = index.deletions_df().select("doc_id")
-        if index.deletions_broadcast() is not None:
-            dels = F.broadcast(dels)
-        matches = matches.join(dels, "doc_id", "left_anti")
+    matches = anti_join_deleted(index, matches)
     if exclude_terms:
         neg = index.lookup_query(exclude_terms)
         if neg:

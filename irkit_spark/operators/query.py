@@ -17,7 +17,9 @@ Every kernel-mode operator (search, batch_search, selective, tiered,
 phrase, near) takes its serving decisions from serving_gates (doc
 lengths broadcast or cogrouped; tombstones masked or anti-joined),
 shard_plan (the per-shard applyInPandas or cogroup) and, when it
-collects, merge_topk (the driver-side (-score, doc_id) merge).
+collects, merge_topk (the driver-side (-score, doc_id) merge). search
+and batch_search run the same kernel on the driver instead (local_sweep)
+when the query's postings fit fits_local.
 
 Determinism / rank-identity (BASELINE.json:14): every path accumulates a
 doc's score over its query terms in ascending term_id order starting
@@ -147,9 +149,10 @@ class Index:
         return self._dl_bc
 
     # ---- deletions (operators/delete.py tombstones) ----
-    # versioned like _dl_bc_cache: one broadcast per artifact commit,
-    # replaced (destroyed) when delete_docs rewrites the artifact
-    _del_bc_cache: dict[tuple, tuple[float, object]] = {}
+    # versioned like _dl_bc_cache: (version, set size, broadcast or
+    # None) per artifact commit, the broadcast replaced (destroyed)
+    # when delete_docs rewrites the artifact
+    _del_bc_cache: dict[tuple, tuple[float, int, object]] = {}
 
     def has_deletions(self) -> bool:
         """Checked per query (a filesystem stat): tombstones can land
@@ -168,31 +171,30 @@ class Index:
         as one broadcast, or None when no deletions exist or the set
         exceeds DEL_BROADCAST_MAX (queries then anti-join on the
         cogrouped docs path). Version-keyed on the artifact commit so
-        a later delete_docs invalidates every open handle."""
+        a later delete_docs invalidates every open handle. The set's
+        size is cached with it, so a set above the gate is counted once
+        per commit, not once per query."""
         if not self.has_deletions():
             return None
         key, ver = self._artifact_key("deletions")
         hit = Index._del_bc_cache.get(key) if ver is not None else None
-        if hit is not None and hit[0] == ver:
-            self._del_bc = hit[1]
-            return self._del_bc
-        df = self.deletions_df()
-        n = df.count()
-        if n > config.DEL_BROADCAST_MAX:
-            return None
-        pdf = df.select("partition_id", "doc_id").toPandas()
-        sh = pdf["partition_id"].to_numpy()
-        ids = pdf["doc_id"].to_numpy().astype(np.int64)
-        arrs: dict[int, np.ndarray] = {}
-        for s in np.unique(sh):
-            arrs[int(s)] = np.sort(ids[sh == s])
-        bc = self.spark.sparkContext.broadcast(arrs)
+        if hit is None or hit[0] != ver:
+            if hit is not None and hit[2] is not None:
+                hit[2].destroy()        # superseded by the new commit
+            hit = (ver, self.deletions_df().count(), None)
+        _, n, bc = hit
+        fits = n <= config.DEL_BROADCAST_MAX
+        if fits and bc is None:
+            pdf = (self.deletions_df().select("partition_id", "doc_id")
+                   .toPandas())
+            sh = pdf["partition_id"].to_numpy()
+            ids = pdf["doc_id"].to_numpy().astype(np.int64)
+            arrs = {int(s): np.sort(ids[sh == s]) for s in np.unique(sh)}
+            bc = self.spark.sparkContext.broadcast(arrs)
         if ver is not None:
-            if hit is not None:
-                hit[1].destroy()
-            Index._del_bc_cache[key] = (ver, bc)
-        self._del_bc = bc
-        return bc
+            Index._del_bc_cache[key] = (ver, n, bc)
+        self._del_bc = bc if fits else None
+        return self._del_bc
 
     def persist(self):
         """Pin the postings/terms tables in executor memory and
@@ -849,6 +851,16 @@ def _search_local(index: Index, qmeta: list[dict], k: int, mode: str,
                          index.quantized, dl_bc=dl_bc, del_bc=del_bc,
                          neg_tids=frozenset(
                              m["term_id"] for m in neg_meta))
+    parts = local_sweep(index, kern, by_tid, mode, k)
+    return merge_topk(index.spark, parts, k)
+
+
+def local_sweep(index: Index, kern, by_tid: dict[int, list], mode: str,
+                k: int) -> list[pd.DataFrame]:
+    """Run kern over each shard of by_tid ({term_id: [(shard, blocks)]},
+    from _local_postings) on the driver, in shard order, with the
+    handle's decoded-block cache; returns the per-shard top-k frames
+    unmerged (search merges them, batch_search tags them per query)."""
     per_shard: dict[int, dict[str, list]] = {}
     for tid, lst in by_tid.items():
         for shard, blocks in lst:
@@ -882,7 +894,7 @@ def _search_local(index: Index, qmeta: list[dict], k: int, mode: str,
                     theta = np.partition(
                         all_scores, all_scores.size - k)[
                         all_scores.size - k]
-    return merge_topk(index.spark, parts, k)
+    return parts
 
 
 def _docs_touched(index: Index, qpost: DataFrame,
@@ -1185,25 +1197,32 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
                  k: int = 10, mode: str = "wand",
                  scorer: str = "bm25",
                  doc_filter: str | None = None) -> DataFrame:
-    """Top-k for a whole QUERY SET in one distributed pass:
-    (query_id, doc_id, score), k rows per query.
+    """Top-k for a whole QUERY SET: (query_id, doc_id, score), k rows
+    per query, same rows as per-query search().
 
     The irk-query batch/TREC-run shape ([pub:tools/irk-query.cpp]
-    processes a query file) done Spark-natively: per-query jobs cost a
-    fixed ~1-2s of scheduling each, so a 10k-query TREC run would be
-    hours of pure overhead — here ALL queries' terms prune ONE
-    postings scan, each shard task scores every query against its
-    resident sub-lists (shared decoded-block cache across queries
-    inside the task), and one k-per-query window finishes the run. No
-    extra shuffle vs a single query; scales with shards, not with
-    |queries|.
+    processes a query file). Two routes, picked by the gate
+    search(local=None) uses (fits_local over the summed df of the
+    set's distinct terms):
+      * the set fits and there is no doc_filter: the driver kernel —
+        one _local_postings call for the union of the set's terms (one
+        collect at most, none when warm), then each query's driver
+        shard sweep over the handle's decoded-block cache, merged k
+        per query: zero Spark jobs once warm;
+      * otherwise one distributed pass: ALL queries' terms prune ONE
+        postings scan, each shard task scores every query against its
+        resident sub-lists (one decoded-block cache across the task's
+        queries), and a k-per-query merge finishes the run — on the
+        driver below _BATCH_DRIVER_MAX candidate rows, else a
+        distributed window. Per-query jobs would cost a fixed ~1-2s of
+        scheduling each; this pass scales with shards, not |queries|.
 
     queries: dict {query_id: text} or list of texts (ids = list
     index as string). OOV-only queries yield no rows (P3).
 
     doc_filter: optional SQL predicate over the docs table — the whole
     run restricted to a doc slice (see search(doc_filter=); forces the
-    cogroup path, same lossless-subset semantics)."""
+    distributed cogroup path, same lossless-subset semantics)."""
     from pyspark.sql import Window
     if mode not in ("daat", "wand", "maxscore", "and"):
         raise ValueError(f"batch_search supports daat|wand|maxscore|"
@@ -1217,9 +1236,6 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     out_schema = "query_id string, doc_id long, score double"
     if not qmetas:
         return spark.createDataFrame([], out_schema)
-    all_tids = sorted({m["term_id"] for qm in qmetas.values()
-                       for m in qm})
-    qpost = index.postings.filter(F.col("term_id").isin(all_tids))
     dl_bc, del_bc, del_over_gate = serving_gates(
         index, with_dl=doc_filter is None)
     kerns = {qid: _shard_kernel(qm, index.avgdl, index.codec, k,
@@ -1232,6 +1248,17 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
              for qid, qm in qmetas.items()}
     tids_by_qid = {qid: {m["term_id"] for m in qm}
                    for qid, qm in qmetas.items()}
+    set_meta = {m["term_id"]: m for qm in qmetas.values() for m in qm}
+    if doc_filter is None and fits_local(
+            index, sum(m["df"] for m in set_meta.values()), del_over_gate):
+        by_tid = index._local_postings(list(set_meta.values()))
+        parts = [p.assign(query_id=qid)
+                 for qid, kern in kerns.items()
+                 for p in local_sweep(
+                     index, kern, {t: by_tid[t] for t in tids_by_qid[qid]},
+                     mode, k)]
+        return merge_topk(spark, parts, k, group="query_id")
+    qpost = index.postings.filter(F.col("term_id").isin(sorted(set_meta)))
 
     def run_all(pdf: pd.DataFrame,
                 docs_pdf: pd.DataFrame | None = None) -> pd.DataFrame:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 
@@ -60,3 +61,25 @@ def index_small(spark, pages_small, tmp_path_factory):
                           text_from_html=True)
     from irkit_spark.operators.query import Index
     return Index(spark, out), metrics
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), number of Spark jobs fn scheduled),
+    counted through a job group used by no other call (the status
+    tracker keeps a group's jobs for the whole session)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{next(_job_groups)}"
+        sc.setJobGroup(group, "counted call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return run

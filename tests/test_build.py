@@ -254,6 +254,28 @@ def test_vocab_gate_paths_byte_identical(spark, pages_small,
     assert ta == tb
 
 
+def test_id_broadcast_gate_paths_identical(spark, pages_small,
+                                           index_small, tmp_path,
+                                           monkeypatch):
+    """Gate audit, config.ID_BROADCAST_MAX: with the gate at 0 the
+    (url, doc_id) mapping is shuffle-joined instead of broadcast, and
+    the build writes the same docs, terms and postings rows as the
+    default build (index_small, same corpus and layout)."""
+    from irkit_spark import config
+    from irkit_spark.operators.build import build_index
+    idx, _ = index_small
+    out = str(tmp_path / "shuffle_ids")
+    monkeypatch.setattr(config, "ID_BROADCAST_MAX", 0)
+    build_index(spark, pages_small, out, docs_per_shard=300,
+                text_from_html=True)
+
+    def table(path, name):
+        return sorted(tuple(r) for r in
+                      spark.read.parquet(f"{path}/{name}").collect())
+    for name in ("docs", "terms", "postings"):
+        assert table(out, name) == table(idx.path, name), name
+
+
 def test_doc_id_assignment_parallelism_invariant(spark, pages_small):
     """Same dense ids regardless of input partitioning (T2)."""
     from irkit_spark.plans.dense_ids import assign_dense_ids

@@ -101,6 +101,22 @@ def test_batch_search_honors_tombstones(del_pair):
             search(tomb, q, k=10, mode="wand", local=False))
 
 
+@pytest.mark.parametrize("mode", ["wand", "daat", "maxscore", "and"])
+def test_batch_search_routes_identical_tombstoned(del_pair, monkeypatch,
+                                                  mode):
+    """On a tombstoned handle batch_search's driver route and its
+    forced distributed route (LOCAL_QUERY_MAX_POSTINGS=0) return the
+    same rows in the same order, with no tombstoned doc."""
+    _, tomb = del_pair
+    driver = [tuple(r) for r in
+              batch_search(tomb, QUERIES, k=10, mode=mode).collect()]
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 0)
+    dist = [tuple(r) for r in
+            batch_search(tomb, QUERIES, k=10, mode=mode).collect()]
+    assert driver == dist and driver
+    assert not {r[1] for r in driver} & DELETED
+
+
 def test_phrase_search_honors_tombstones(del_pair):
     clean, tomb = del_pair
     for phrase, slop in (("red fox", 0), ("lazy dog", 1)):
@@ -144,6 +160,29 @@ def test_over_gate_anti_join_fallback(del_pair, monkeypatch):
             assert by_q[str(i)] == want[("wand", q)][:12]
     finally:
         Index._del_bc_cache.clear()
+
+
+def test_over_gate_tombstone_count_cached(del_pair, monkeypatch,
+                                          count_jobs):
+    """Above DEL_BROADCAST_MAX the tombstone set is counted once per
+    commit, not once per query: a repeated distributed query costs the
+    first one's jobs minus the count's, the gate answer itself costs no
+    job once cached, and the rows equal the broadcast-mask path's."""
+    _, tomb = del_pair
+    q = QUERIES[1]
+
+    def run():
+        return rows(search(over, q, k=12, mode="wand", local=False))
+    want = rows(search(tomb, q, k=12, mode="wand", local=False))
+    _, n_count = count_jobs(lambda: tomb.deletions_df().count())
+    monkeypatch.setattr(config, "DEL_BROADCAST_MAX", 0)
+    monkeypatch.setattr(Index, "_del_bc_cache", {})
+    over = Index(tomb.spark, tomb.path)
+    first, n_first = count_jobs(run)
+    again, n_again = count_jobs(run)
+    assert first == again == want and want
+    assert n_count > 0 and n_again == n_first - n_count
+    assert count_jobs(over.deletions_broadcast) == (None, 0)
 
 
 def test_cumulative_idempotent_and_clear(spark, tmp_path):

@@ -272,6 +272,50 @@ def test_batch_search_cogroup_path_identical(spark, index_small):
         assert fast == slow and fast, mode
 
 
+BATCH_QS = {"a": "term00000 term00003 term00123",
+            "b": "term00001 term00010",
+            "oov": "zzzznotaterm",
+            "c": "term00002 term00005 term00050"}
+
+
+@pytest.mark.parametrize("mode", ["wand", "daat", "maxscore", "and"])
+def test_batch_search_routes_identical(index_small, monkeypatch, mode):
+    """batch_search's driver-kernel route (the default while the set's
+    summed df fits LOCAL_QUERY_MAX_POSTINGS) returns exactly the rows,
+    in the same order, of the distributed route forced by a gate of
+    0."""
+    from irkit_spark import config
+    from irkit_spark.operators.query import batch_search
+    idx, _ = index_small
+    driver = [tuple(r) for r in
+              batch_search(idx, BATCH_QS, k=10, mode=mode).collect()]
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 0)
+    dist = [tuple(r) for r in
+            batch_search(idx, BATCH_QS, k=10, mode=mode).collect()]
+    assert driver == dist and driver
+
+
+def test_batch_search_driver_route_warm_runs_no_jobs(index_small,
+                                                     monkeypatch,
+                                                     count_jobs):
+    """A warm batch_search(...).collect() on the driver route schedules
+    no Spark job; the forced distributed route keeps its 2 (the
+    postings scan + shard kernels, and the driver merge's collect)."""
+    from irkit_spark import config
+    from irkit_spark.operators.query import batch_search
+    idx, _ = index_small
+
+    def run():
+        return batch_search(idx, BATCH_QS, k=10).collect()
+    run()                                   # warm the driver caches
+    rows, n = count_jobs(run)
+    assert n == 0 and len(rows) == 30
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 0)
+    run()
+    dist, n = count_jobs(run)
+    assert n == 2 and dist == rows
+
+
 def test_post_cache_eviction(spark, index_small, monkeypatch):
     """Above Index._POST_CACHE_MAX postings the driver cache drops
     every term but the current query's: after two local queries on
@@ -562,11 +606,15 @@ def test_batch_search_window_fallback_identical(spark, index_small,
                                                 monkeypatch):
     """Above _BATCH_DRIVER_MAX the per-query merge stays a distributed
     window (r7 gate); forcing the gate to 0 must give byte-identical
-    rows and order to the driver-merge path."""
+    rows and order to the driver-merge path. Both sides run the
+    distributed route (LOCAL_QUERY_MAX_POSTINGS=0), the only one that
+    has a merge gate."""
+    from irkit_spark import config
     from irkit_spark.operators import query as q
     idx, _ = index_small
     qs = {"a": "term00000 term00003 term00123",
           "b": "term00001 term00010"}
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 0)
     fast = [(r["query_id"], r["doc_id"], r["score"]) for r in
             q.batch_search(idx, qs, k=10, mode="wand").collect()]
     monkeypatch.setattr(q, "_BATCH_DRIVER_MAX", 0)

@@ -107,6 +107,22 @@ def test_segment_batch_and_not_and_filter(spark, seg):
         assert x == y and x, kw
 
 
+@pytest.mark.parametrize("mode", ["wand", "daat", "maxscore", "and"])
+def test_segment_batch_routes_identical(spark, seg, monkeypatch, mode):
+    """On a SegmentedIndex batch_search's driver route and its forced
+    distributed route (LOCAL_QUERY_MAX_POSTINGS=0) return the same
+    rows in the same order."""
+    from irkit_spark import config
+    dirs, _ = seg
+    s = SegmentedIndex(spark, dirs)
+    driver = [tuple(r) for r in
+              batch_search(s, list(QUERIES), k=10, mode=mode).collect()]
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 0)
+    dist = [tuple(r) for r in
+            batch_search(s, list(QUERIES), k=10, mode=mode).collect()]
+    assert driver == dist and driver
+
+
 def test_segment_tombstones_honored(spark, seg, tmp_path):
     import shutil
     dirs, merged = seg
