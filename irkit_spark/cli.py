@@ -81,8 +81,9 @@ def cmd_query(args):
     idx = Index(spark, args.index)
     if args.queries_file:
         # whole TREC run in one batch_search call: on the driver
-        # kernel when the set's summed df fits the search(local=None)
-        # gate and there is no --doc-filter, else one distributed pass
+        # kernel when the queries' summed df, added over the queries,
+        # fits the search(local=None) gate and there is no
+        # --doc-filter, else one distributed pass
         # where all queries' terms prune one postings scan (per-query
         # jobs would cost a fixed ~1-2s of scheduling each)
         queries = _read_queries_file(args.queries_file)

@@ -1202,8 +1202,10 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
 
     The irk-query batch/TREC-run shape ([pub:tools/irk-query.cpp]
     processes a query file). Two routes, picked by the gate
-    search(local=None) uses (fits_local over the summed df of the
-    set's distinct terms):
+    search(local=None) uses (fits_local), applied to the driver route's
+    work: the queries are swept one after another on one driver core,
+    so the set fits when the sum over its queries of each query's
+    summed df does — the bound one query gets, not the union's:
       * the set fits and there is no doc_filter: the driver kernel —
         one _local_postings call for the union of the set's terms (one
         collect at most, none when warm), then each query's driver
@@ -1250,7 +1252,8 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
                    for qid, qm in qmetas.items()}
     set_meta = {m["term_id"]: m for qm in qmetas.values() for m in qm}
     if doc_filter is None and fits_local(
-            index, sum(m["df"] for m in set_meta.values()), del_over_gate):
+            index, sum(m["df"] for qm in qmetas.values() for m in qm),
+            del_over_gate):
         by_tid = index._local_postings(list(set_meta.values()))
         parts = [p.assign(query_id=qid)
                  for qid, kern in kerns.items()

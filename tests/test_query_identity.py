@@ -316,6 +316,31 @@ def test_batch_search_driver_route_warm_runs_no_jobs(index_small,
     assert n == 2 and dist == rows
 
 
+def test_batch_search_gate_counts_every_query(index_small, monkeypatch,
+                                              count_jobs):
+    """The driver route sweeps the queries one after another, so its
+    gate adds each query's summed df over the set: two copies of one
+    query cost twice one query's postings although their union is one
+    query's. At a gate of exactly that union the set runs distributed;
+    at twice it, on the driver."""
+    from irkit_spark import config
+    from irkit_spark.operators.query import batch_search, query_meta
+    idx, _ = index_small
+    text = "term00000 term00003 term00123"
+    one = sum(m["df"] for m in query_meta(idx, text)[1])
+    qs = {"a": text, "b": text}
+
+    def run():
+        return batch_search(idx, qs, k=10).collect()
+    run()                                   # warm the driver caches
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", one)
+    dist, n_dist = count_jobs(run)
+    monkeypatch.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 2 * one)
+    driver, n_driver = count_jobs(run)
+    assert (n_dist, n_driver) == (2, 0)
+    assert driver == dist and len(driver) == 20
+
+
 def test_post_cache_eviction(spark, index_small, monkeypatch):
     """Above Index._POST_CACHE_MAX postings the driver cache drops
     every term but the current query's: after two local queries on
