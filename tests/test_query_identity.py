@@ -457,13 +457,19 @@ def test_local_path_identity(spark, index_small, mode):
     bit-identical to the distributed per-shard path: same numpy
     kernel, same (-score, doc_id) merge order (VERDICT r3 item 4)."""
     idx, _ = index_small
-    for q, k in [("term00000 term00003 term00123", 10),
-                 ("term00001 term00010", 25),
-                 ("term00002 term00005 term00050", 100)]:
-        dist = search(idx, q, k=k, mode=mode, local=False).collect()
-        loc = search(idx, q, k=k, mode=mode, local=True).collect()
+    for q, k, excl in [("term00000 term00003 term00123", 10, None),
+                       ("term00001 term00010", 25, None),
+                       ("term00002 term00005 term00050", 100, None),
+                       # NOT: the excluded term's blocks ride the same
+                       # driver cache / postings scan and mask in-kernel
+                       ("term00000 term00003 term00123", 25,
+                        "term00001")]:
+        dist = search(idx, q, k=k, mode=mode, local=False,
+                      exclude_terms=excl).collect()
+        loc = search(idx, q, k=k, mode=mode, local=True,
+                     exclude_terms=excl).collect()
         assert [(r["doc_id"], r["score"]) for r in dist] == \
-            [(r["doc_id"], r["score"]) for r in loc], (mode, q)
+            [(r["doc_id"], r["score"]) for r in loc], (mode, q, excl)
     if mode == "daat":      # QL scorer through the local kernel too
         q = "term00001 term00010"
         dist = search(idx, q, 10, "daat", scorer="ql",
@@ -486,24 +492,47 @@ def test_local_path_gate_errors(spark, index_small, monkeypatch):
         search(idx, "term00000", 10, "taat", local=True)
 
 
-def test_local_path_warm_runs_no_jobs(spark, index_small):
+def test_local_path_warm_runs_no_jobs(index_small, count_jobs):
     """Once the term blocks are cached, a local query schedules ZERO
-    Spark jobs (per-query-ms serving — the irk-query analog)."""
+    Spark jobs, its collect included (per-query-ms serving — the
+    irk-query analog)."""
     idx, _ = index_small
     q = "term00000 term00007 term00222"
-    search(idx, q, 10, "wand", local=True).collect()   # warm the cache
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    from irkit_spark.operators import query as qmod
-    qmeta = idx.lookup_query(q)
-    out = qmod._search_local(idx, qmeta, 10, "wand", "bm25")
-    # _search_local itself runs driver-side; only the createDataFrame
-    # materialization would schedule a job on .collect(), which is
-    # outside the serving kernel. Assert the kernel scheduled nothing.
-    after = tracker.getJobIdsForGroup(None)
-    assert before == after
-    assert out.count() == 10
+
+    def run():
+        return search(idx, q, 10, "wand", local=True).collect()
+    run()                                   # warm the driver caches
+    rows, n = count_jobs(run)
+    assert n == 0 and len(rows) == 10
+
+
+def test_search_distributed_job_budget(index_small, monkeypatch,
+                                       count_jobs):
+    """Warm forced-distributed search takes 2 Spark jobs, 5 with a
+    doc_filter (its cogroup with the filtered docs shards), and a
+    one-query forced-distributed batch_search takes the same counts
+    and returns the same rows in the same order."""
+    from irkit_spark import config
+    from irkit_spark.operators.query import batch_search
+    idx, _ = index_small
+    q = "term00000 term00003 term00123"
+    for pred, want in ((None, 2), ("doc_id % 3 = 0", 5)):
+        def one():
+            return [(r["doc_id"], r["score"]) for r in
+                    search(idx, q, 10, "wand", local=False,
+                           doc_filter=pred).collect()]
+
+        def batch():
+            with monkeypatch.context() as mp:
+                mp.setattr(config, "LOCAL_QUERY_MAX_POSTINGS", 0)
+                return [(r["doc_id"], r["score"]) for r in
+                        batch_search(idx, {"q": q}, 10, "wand",
+                                     doc_filter=pred).collect()]
+        one(), batch()                      # warm the driver caches
+        rows, n_one = count_jobs(one)
+        brows, n_batch = count_jobs(batch)
+        assert (n_one, n_batch) == (want, want), pred
+        assert rows == brows and len(rows) == 10, pred
 
 
 def test_batch_search_matches_per_query(spark, index_small):
