@@ -463,7 +463,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return both.orderBy("doc_id")
 
     def q_index_wand_local_top10(spark, sf):
-        # driver-side serving kernel (operators/query._search_local):
+        # driver-side serving kernel (operators/query.local_sweep):
         # same numpy WAND kernel, posting blocks from the driver cache,
         # zero Spark jobs once warm — oracled against the same BM25 SQL
         # as the distributed path (they are bit-identical; also pinned

@@ -80,12 +80,13 @@ def cmd_query(args):
     spark = _session("irkit-query")
     idx = Index(spark, args.index)
     if args.queries_file:
-        # whole TREC run in one batch_search call: on the driver
-        # kernel when the queries' summed df, added over the queries,
-        # fits the search(local=None) gate and there is no
-        # --doc-filter, else one distributed pass
-        # where all queries' terms prune one postings scan (per-query
-        # jobs would cost a fixed ~1-2s of scheduling each)
+        # whole TREC run in one batch_search call, the core a single
+        # query runs through too: on the driver kernel when the
+        # queries' summed df, added over the queries, fits the
+        # search(local=None) gate and there is no --doc-filter, else
+        # one distributed pass where all queries' terms prune one
+        # postings scan, then the driver k-merge (per-query jobs would
+        # cost a fixed ~1-2s of scheduling each)
         queries = _read_queries_file(args.queries_file)
         rows = batch_search(idx, queries, k=args.k, mode=args.mode,
                             scorer=args.scorer,

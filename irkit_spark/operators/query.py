@@ -17,9 +17,10 @@ Every kernel-mode operator (search, batch_search, selective, tiered,
 phrase, near) takes its serving decisions from serving_gates (doc
 lengths broadcast or cogrouped; tombstones masked or anti-joined),
 shard_plan (the per-shard applyInPandas or cogroup) and, when it
-collects, merge_topk (the driver-side (-score, doc_id) merge). search
-and batch_search run the same kernel on the driver instead (local_sweep)
-when the query's postings fit fits_local.
+collects, merge_topk (the driver-side (-score, doc_id) merge). search's
+kernel modes and batch_search are one core, _kernel_topk (a search is
+a one-query set): one fits_local decision, then either the driver
+sweep (local_sweep) or one shard plan, both ending in merge_topk.
 
 Determinism / rank-identity (BASELINE.json:14): every path accumulates a
 doc's score over its query terms in ascending term_id order starting
@@ -56,6 +57,7 @@ from irkit_spark.functions.scoring import bm25_tf_norm, idf as idf_fn
 from irkit_spark.functions.tokenize import tokenize
 
 TOPK_SCHEMA = "doc_id long, score double"
+_BATCH_SCHEMA = "query_id string, doc_id long, score double"
 
 # batch_search driver-merge gate: above this many candidate rows
 # (|queries| * k * n_shards upper bound) the per-query top-k merge
@@ -832,35 +834,12 @@ def _shard_kernel(qmeta: list[dict], avgdl: float, codec: str, k: int,
     return run
 
 
-def _search_local(index: Index, qmeta: list[dict], k: int, mode: str,
-                  scorer: str, del_bc=None,
-                  neg_meta: list[dict] | None = None) -> DataFrame:
-    """Driver-side execution of the SAME per-shard kernel: posting
-    blocks from the driver cache (_local_postings), doc lengths from
-    the (driver-visible) broadcast value, global top-k merged with the
-    identical (-score, doc_id) order — bit-identical to the distributed
-    path by construction (tested), with zero Spark jobs once warm.
-    neg_meta (exclude_terms): those terms' blocks ride the same driver
-    cache and mask in-kernel exactly like the distributed path."""
-    neg_meta = neg_meta or []
-    dl_bc = index.doc_len_broadcast()
-    by_tid = index._local_postings(qmeta + neg_meta)
-    kern = _shard_kernel(qmeta, index.avgdl, index.codec, k,
-                         index.docs_per_shard, mode, scorer,
-                         index.coll_len, index.bound_slack,
-                         index.quantized, dl_bc=dl_bc, del_bc=del_bc,
-                         neg_tids=frozenset(
-                             m["term_id"] for m in neg_meta))
-    parts = local_sweep(index, kern, by_tid, mode, k)
-    return merge_topk(index.spark, parts, k)
-
-
 def local_sweep(index: Index, kern, by_tid: dict[int, list], mode: str,
                 k: int) -> list[pd.DataFrame]:
     """Run kern over each shard of by_tid ({term_id: [(shard, blocks)]},
     from _local_postings) on the driver, in shard order, with the
     handle's decoded-block cache; returns the per-shard top-k frames
-    unmerged (search merges them, batch_search tags them per query)."""
+    unmerged (_kernel_topk tags them per query and merges them)."""
     per_shard: dict[int, dict[str, list]] = {}
     for tid, lst in by_tid.items():
         for shard, blocks in lst:
@@ -1119,7 +1098,12 @@ def search(index: Index, query: str, k: int = 10,
     milliseconds once the term blocks are cached, the irk-query
     single-node serving analog); False forces the distributed path;
     True requires the local path (raises when the query exceeds the
-    gate). TAAT always runs distributed (it is the SQL-shaped path)."""
+    gate). TAAT always runs distributed (it is the SQL-shaped path).
+
+    The kernel modes run as a one-query batch_search (_kernel_topk):
+    the same gate, driver sweep, shard plan and driver k-merge, so
+    they run at call time (eager) on both routes; the returned frame
+    holds the merged top-k. TAAT stays a lazy Spark plan."""
     if mode not in ("taat", "daat", "wand", "maxscore", "and"):
         raise ValueError(f"unknown mode {mode!r}: "
                          "taat|daat|wand|maxscore|and")
@@ -1140,10 +1124,6 @@ def search(index: Index, query: str, k: int = 10,
                 "exclude_terms — a term cannot be required and "
                 "forbidden at once")
         neg_meta = index.lookup_query(exclude_terms)
-    neg_tids = frozenset(m["term_id"] for m in neg_meta)
-    dl_bc, del_bc, del_over_gate = serving_gates(
-        index, with_dl=doc_filter is None)
-
     if doc_filter is not None:
         if mode == "taat":
             raise ValueError("doc_filter needs the per-shard kernel "
@@ -1152,45 +1132,22 @@ def search(index: Index, query: str, k: int = 10,
             raise ValueError("doc_filter runs distributed (the "
                              "predicate is evaluated on the docs "
                              "table); local=True is not available")
-    elif mode != "taat" and local is not False:
-        fits = fits_local(index, sum(m["df"] for m in qmeta + neg_meta),
-                          del_over_gate)
-        if local and not fits:
-            raise ValueError(
-                "local=True but the query exceeds the driver-kernel "
-                "gate (sum df > LOCAL_QUERY_MAX_POSTINGS, doc lengths "
-                "above the broadcast cap, or a tombstone set above "
-                "DEL_BROADCAST_MAX)")
-        if fits:
-            return _search_local(index, qmeta, k, mode, scorer,
-                                 del_bc=del_bc, neg_meta=neg_meta)
-    elif local:
+    if mode != "taat":
+        return _kernel_topk(index, {"": qmeta}, k, mode, scorer,
+                            doc_filter, local, neg_meta).select(
+                                "doc_id", "score")
+    if local:
         raise ValueError("local=True is not available for mode='taat'")
-
-    tids = [m["term_id"] for m in qmeta] + list(neg_tids)
-    qpost = index.postings.filter(F.col("term_id").isin(tids))
-
-    if mode == "taat":
-        # NOT on the SQL-shaped path: decoded excluded doc ids
-        # anti-joined out before the final top-k (postings of the
-        # excluded terms only — one pruned scan, no corpus pass)
-        pos_tids = [m["term_id"] for m in qmeta]
-        neg_docs = (_neg_docs_df(index, neg_tids)
-                    if neg_tids else None)
-        return _taat_from_index(
-            index, qmeta,
-            qpost.filter(F.col("term_id").isin(pos_tids)),
-            k, scorer, neg_docs=neg_docs)
-
-    kern = _shard_kernel(qmeta, index.avgdl, index.codec, k,
-                         index.docs_per_shard, mode, scorer,
-                         index.coll_len, index.bound_slack,
-                         index.quantized, dl_bc=dl_bc,
-                         restrict=doc_filter is not None or del_over_gate,
-                         del_bc=del_bc, neg_tids=neg_tids)
-    out = shard_plan(index, qpost, kern, TOPK_SCHEMA, dl_bc, doc_filter,
-                     del_over_gate)
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    # NOT on the SQL-shaped path: decoded excluded doc ids anti-joined
+    # out before the final top-k (postings of the excluded terms only
+    # — one pruned scan, no corpus pass)
+    neg_tids = frozenset(m["term_id"] for m in neg_meta)
+    return _taat_from_index(
+        index, qmeta,
+        index.postings.filter(
+            F.col("term_id").isin([m["term_id"] for m in qmeta])),
+        k, scorer,
+        neg_docs=_neg_docs_df(index, neg_tids) if neg_tids else None)
 
 
 def batch_search(index: Index, queries: dict[str, str] | list[str],
@@ -1198,7 +1155,8 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
                  scorer: str = "bm25",
                  doc_filter: str | None = None) -> DataFrame:
     """Top-k for a whole QUERY SET: (query_id, doc_id, score), k rows
-    per query, same rows as per-query search().
+    per query, same rows as per-query search() — both run the same
+    core (_kernel_topk), a search being a one-query set.
 
     The irk-query batch/TREC-run shape ([pub:tools/irk-query.cpp]
     processes a query file). Two routes, picked by the gate
@@ -1218,6 +1176,7 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
         driver below _BATCH_DRIVER_MAX candidate rows, else a
         distributed window. Per-query jobs would cost a fixed ~1-2s of
         scheduling each; this pass scales with shards, not |queries|.
+    Both routes run at call time (eager) except the window.
 
     queries: dict {query_id: text} or list of texts (ids = list
     index as string). OOV-only queries yield no rows (P3).
@@ -1225,7 +1184,6 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     doc_filter: optional SQL predicate over the docs table — the whole
     run restricted to a doc slice (see search(doc_filter=); forces the
     distributed cogroup path, same lossless-subset semantics)."""
-    from pyspark.sql import Window
     if mode not in ("daat", "wand", "maxscore", "and"):
         raise ValueError(f"batch_search supports daat|wand|maxscore|"
                          f"and, not {mode!r}")
@@ -1234,10 +1192,27 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     qmetas = {qid: query_meta(index, q, scorer)[1]
               for qid, q in queries.items()}
     qmetas = {qid: m for qid, m in qmetas.items() if m}
-    spark = index.spark
-    out_schema = "query_id string, doc_id long, score double"
     if not qmetas:
-        return spark.createDataFrame([], out_schema)
+        return index.spark.createDataFrame([], _BATCH_SCHEMA)
+    return _kernel_topk(index, qmetas, k, mode, scorer, doc_filter)
+
+
+def _kernel_topk(index: Index, qmetas: dict[str, list[dict]], k: int,
+                 mode: str, scorer: str, doc_filter: str | None = None,
+                 local: bool | None = None,
+                 neg_meta: list[dict] | None = None) -> DataFrame:
+    """(query_id, doc_id, score), k rows per query of qmetas (each
+    non-empty) — the one kernel-mode core behind search and
+    batch_search (see batch_search for the two routes). neg_meta
+    (search's exclude_terms): terms masked out of every query's
+    selection, never scored; their df counts toward the driver gate.
+    local: None routes by the gate, False forces the distributed
+    route, True requires the driver route (raises when the set
+    exceeds the gate)."""
+    from pyspark.sql import Window
+    spark = index.spark
+    neg_meta = neg_meta or []
+    neg_tids = frozenset(m["term_id"] for m in neg_meta)
     dl_bc, del_bc, del_over_gate = serving_gates(
         index, with_dl=doc_filter is None)
     kerns = {qid: _shard_kernel(qm, index.avgdl, index.codec, k,
@@ -1246,14 +1221,22 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
                                 index.quantized, dl_bc=dl_bc,
                                 restrict=(doc_filter is not None
                                           or del_over_gate),
-                                del_bc=del_bc)
+                                del_bc=del_bc, neg_tids=neg_tids)
              for qid, qm in qmetas.items()}
-    tids_by_qid = {qid: {m["term_id"] for m in qm}
+    tids_by_qid = {qid: {m["term_id"] for m in qm} | neg_tids
                    for qid, qm in qmetas.items()}
-    set_meta = {m["term_id"]: m for qm in qmetas.values() for m in qm}
-    if doc_filter is None and fits_local(
-            index, sum(m["df"] for qm in qmetas.values() for m in qm),
-            del_over_gate):
+    set_meta = {m["term_id"]: m
+                for qm in [*qmetas.values(), neg_meta] for m in qm}
+    fits = (doc_filter is None and local is not False and fits_local(
+        index, sum(m["df"] for qm in qmetas.values()
+                   for m in qm + neg_meta), del_over_gate))
+    if local and not fits:
+        raise ValueError(
+            "local=True but the query exceeds the driver-kernel "
+            "gate (sum df > LOCAL_QUERY_MAX_POSTINGS, doc lengths "
+            "above the broadcast cap, or a tombstone set above "
+            "DEL_BROADCAST_MAX)")
+    if fits:
         by_tid = index._local_postings(list(set_meta.values()))
         parts = [p.assign(query_id=qid)
                  for qid, kern in kerns.items()
@@ -1285,8 +1268,8 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
         return pd.concat(outs, ignore_index=True)[
             ["query_id", "doc_id", "score"]]
 
-    local = shard_plan(index, qpost, run_all, out_schema, dl_bc,
-                       doc_filter, del_over_gate)
+    shards = shard_plan(index, qpost, run_all, _BATCH_SCHEMA, dl_bc,
+                        doc_filter, del_over_gate)
     # global k-per-query merge. The shard tasks emit <= k rows per
     # (query, shard), so below _BATCH_DRIVER_MAX candidate rows the
     # merge runs on the driver (the selective/tiered pattern): one
@@ -1295,10 +1278,10 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
     # TREC run over 10^4 shards) the distributed window remains.
     n_shards = int(index.stats.get("n_shards", 0) or 0)
     if n_shards and len(qmetas) * k * n_shards <= _BATCH_DRIVER_MAX:
-        return merge_topk(spark, [local.toPandas()], k, group="query_id")
+        return merge_topk(spark, [shards.toPandas()], k, group="query_id")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.asc("doc_id"))
-    return (local.withColumn("__rk", F.row_number().over(w))
+    return (shards.withColumn("__rk", F.row_number().over(w))
             .filter(F.col("__rk") <= k).drop("__rk")
             .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
 
