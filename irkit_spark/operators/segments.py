@@ -125,7 +125,11 @@ class SegmentedIndex(Index):
         self.bound_slack = max(max(seg_slacks),
                                max(1.0, self.avgdl / min_avgdl
                                    if min_avgdl else 1.0))
+        # each segment's n_shards covers shard ids 0..its own max doc
+        # id, so the union's is the largest (what merge_indexes records)
         self.stats = dict(d0, n_docs=self.n_docs,
+                          n_shards=max(int(s.asDict().get("n_shards") or 0)
+                                       for s in stats),
                           coll_len=self.coll_len,
                           avg_doc_len=self.avgdl,
                           bound_slack=self.bound_slack,

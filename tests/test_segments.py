@@ -71,6 +71,17 @@ def test_segment_stats_equal_merged(spark, seg):
     assert key(s) == key(m)
 
 
+def test_segment_n_shards_equals_merged(spark, seg):
+    """The union spans the shards of its widest segment, as the merge
+    records them — not the first segment's narrower count, which the
+    driver-merge and shard-bound gates would under-size."""
+    dirs, merged = seg
+    s = SegmentedIndex(spark, dirs)
+    m = Index(spark, merged)
+    assert Index(spark, dirs[0]).stats["n_shards"] < m.stats["n_shards"]
+    assert s.stats["n_shards"] == m.stats["n_shards"]
+
+
 def test_segment_search_identical_to_merged(spark, seg):
     dirs, merged = seg
     s = SegmentedIndex(spark, dirs)
