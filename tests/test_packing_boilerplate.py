@@ -8,8 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from irkit_spark.pipeline.boilerplate import (
-    _apply_join, boilerplate_lines, dedup_paragraphs,
-    remove_boilerplate)
+    boilerplate_lines, dedup_paragraphs, remove_boilerplate)
 from irkit_spark.pipeline.packing import pack_plan
 
 
@@ -61,10 +60,15 @@ def test_remove_boilerplate_all_lines_boiled(spark):
 
 
 def test_apply_join_matches_literal_path(line_docs):
+    """Both sides of BOILER_COLLECT_MAX through remove_boilerplate:
+    the driver-collected literal path (default gate) and the join
+    fallback (collect_max=0, taken whenever any line is boilerplate)
+    return the same rows."""
     lit = remove_boilerplate(line_docs, min_docs=20) \
         .orderBy("doc_id").toPandas()
-    jn = _apply_join(line_docs, boilerplate_lines(line_docs, 20),
-                     "text").orderBy("doc_id").toPandas()
+    jn = remove_boilerplate(line_docs, 20, collect_max=0) \
+        .orderBy("doc_id").toPandas()
+    assert lit["n_removed"].sum() > 0
     pd.testing.assert_frame_equal(lit, jn[lit.columns])
 
 
