@@ -1134,8 +1134,7 @@ def search(index: Index, query: str, k: int = 10,
                              "table); local=True is not available")
     if mode != "taat":
         return _kernel_topk(index, {"": qmeta}, k, mode, scorer,
-                            doc_filter, local, neg_meta).select(
-                                "doc_id", "score")
+                            doc_filter, local, neg_meta, group=None)
     if local:
         raise ValueError("local=True is not available for mode='taat'")
     # NOT on the SQL-shaped path: decoded excluded doc ids anti-joined
@@ -1200,7 +1199,8 @@ def batch_search(index: Index, queries: dict[str, str] | list[str],
 def _kernel_topk(index: Index, qmetas: dict[str, list[dict]], k: int,
                  mode: str, scorer: str, doc_filter: str | None = None,
                  local: bool | None = None,
-                 neg_meta: list[dict] | None = None) -> DataFrame:
+                 neg_meta: list[dict] | None = None,
+                 group: str | None = "query_id") -> DataFrame:
     """(query_id, doc_id, score), k rows per query of qmetas (each
     non-empty) — the one kernel-mode core behind search and
     batch_search (see batch_search for the two routes). neg_meta
@@ -1208,7 +1208,10 @@ def _kernel_topk(index: Index, qmetas: dict[str, list[dict]], k: int,
     selection, never scored; their df counts toward the driver gate.
     local: None routes by the gate, False forces the distributed
     route, True requires the driver route (raises when the set
-    exceeds the gate)."""
+    exceeds the gate). group=None (search, one query) returns
+    (doc_id, score): the driver merge then neither tags parts with an
+    id nor needs a select to drop it, which cost ~3 ms of driver CPU
+    per interactive query."""
     from pyspark.sql import Window
     spark = index.spark
     neg_meta = neg_meta or []
@@ -1238,12 +1241,12 @@ def _kernel_topk(index: Index, qmetas: dict[str, list[dict]], k: int,
             "DEL_BROADCAST_MAX)")
     if fits:
         by_tid = index._local_postings(list(set_meta.values()))
-        parts = [p.assign(query_id=qid)
+        parts = [p.assign(query_id=qid) if group else p
                  for qid, kern in kerns.items()
                  for p in local_sweep(
                      index, kern, {t: by_tid[t] for t in tids_by_qid[qid]},
                      mode, k)]
-        return merge_topk(spark, parts, k, group="query_id")
+        return merge_topk(spark, parts, k, group=group)
     qpost = index.postings.filter(F.col("term_id").isin(sorted(set_meta)))
 
     def run_all(pdf: pd.DataFrame,
@@ -1278,12 +1281,13 @@ def _kernel_topk(index: Index, qmetas: dict[str, list[dict]], k: int,
     # TREC run over 10^4 shards) the distributed window remains.
     n_shards = int(index.stats.get("n_shards", 0) or 0)
     if n_shards and len(qmetas) * k * n_shards <= _BATCH_DRIVER_MAX:
-        return merge_topk(spark, [shards.toPandas()], k, group="query_id")
+        return merge_topk(spark, [shards.toPandas()], k, group=group)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                F.asc("doc_id"))
-    return (shards.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= k).drop("__rk")
-            .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
+    out = (shards.withColumn("__rk", F.row_number().over(w))
+           .filter(F.col("__rk") <= k).drop("__rk")
+           .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
+    return out if group else out.select("doc_id", "score")
 
 
 def _neg_docs_df(index: Index, neg_tids: frozenset) -> DataFrame:
