@@ -482,9 +482,9 @@ def _positions_kernel(match, tf_col: str, uniq_meta: list[dict],
         if head is None:
             return empty
         dl_arr, valid = head
-        # one row per (term, shard) — same iterrows invariant as the
-        # main shard kernel (operators/query.py run()); blocks-per-row
-        # layouts would need a column pull here too
+        # one row per (term, shard): iterrows stays a handful of rows;
+        # blocks-per-row layouts would need a column pull, as
+        # operators/query.py _rows_by_term does
         rows = {int(r["term_id"]): decode_positions_row(r)
                 for _, r in post_pdf.iterrows()}
         got = match(rows, base)

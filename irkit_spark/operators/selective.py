@@ -14,7 +14,7 @@ upper bound rather than a relevance estimate:
                            stored block-max tf_norm
 
 which is precisely the quantity the WAND kernel bounds blocks with
-(query._shard_kernel `bub`), maximized over the shard: no document in
+(query._shard_core `bub`), maximized over the shard: no document in
 shard s can score above UB_s (same invariant block-max WAND's
 losslessness rests on; `slack` = the index's bound_slack, >= 1).
 

@@ -38,6 +38,19 @@ def test_quantized_paths_identical(spark, q_indexes, q):
 
 
 @pytest.mark.parametrize("q", QUERIES)
+def test_quantized_driver_route_identical(q_indexes, q):
+    """The driver route (local=True) scores the quantized index
+    bit-identically to the distributed shard plan in every kernel
+    mode."""
+    _, qi = q_indexes
+    for mode in ("daat", "wand", "maxscore"):
+        loc, dist = ([tuple(r) for r in
+                      search(qi, q, 10, mode, local=local).collect()]
+                     for local in (True, False))
+        assert loc == dist and loc, mode
+
+
+@pytest.mark.parametrize("q", QUERIES)
 def test_quantization_error_bounded(spark, q_indexes, q):
     ei, qi = q_indexes
     exact = dict((r["doc_id"], r["score"])

@@ -367,13 +367,11 @@ def test_post_cache_eviction(spark, index_small, monkeypatch):
     assert cache["__n"] == sum(m["df"] for m in meta2)
 
 
-def test_wand_skips_blocks(spark, tmp_path_factory):
-    """Pruning evidence: a rare term's narrow doc range prunes the
-    stopword's far blocks — the WAND kernel must decode strictly fewer
-    blocks than exist (driver-side direct kernel call with a counting
-    decoder), and still return the exact DAAT result."""
-    import irkit_spark.operators.query as qmod
-    from irkit_spark.functions.codecs import CODECS
+@pytest.fixture(scope="module")
+def prune_index(spark, tmp_path_factory):
+    """(index path, query, blocks of the query terms): 600 docs in one
+    shard, where a rare term's narrow doc range lets WAND skip most of
+    a stopword's blocks."""
     from irkit_spark.operators.build import build_index
     from irkit_spark.operators.query import Index
     from pyspark.sql import functions as F
@@ -387,12 +385,28 @@ def test_wand_skips_blocks(spark, tmp_path_factory):
     build_index(spark, df, out, docs_per_shard=1000)
     idx = Index(spark, out)
     q = "common rareword"
+    tids = [m["term_id"] for m in idx.lookup_query(q)]
+    post = idx.postings.filter(F.col("term_id").isin(tids)).toPandas()
+    total_blocks = int(post["blocks"].map(len).sum())
+    assert total_blocks >= 5
+    return out, q, total_blocks
+
+
+def test_wand_skips_blocks(spark, prune_index):
+    """Pruning evidence: a rare term's narrow doc range prunes the
+    stopword's far blocks — the WAND kernel must decode strictly fewer
+    blocks than exist (driver-side direct kernel call with a counting
+    decoder), and still return the exact DAAT result."""
+    import irkit_spark.operators.query as qmod
+    from irkit_spark.functions.codecs import CODECS
+    from irkit_spark.operators.query import Index
+    from pyspark.sql import functions as F
+    out, q, total_blocks = prune_index
+    idx = Index(spark, out)
     qmeta = idx.lookup_query(q)
     tids = [m["term_id"] for m in qmeta]
     post = idx.postings.filter(F.col("term_id").isin(tids)).toPandas()
     docs = idx.docs.select("partition_id", "doc_id", "doc_len").toPandas()
-    total_blocks = int(post["blocks"].map(len).sum())
-    assert total_blocks >= 5
 
     calls = {"n": 0}
     real = CODECS[idx.codec]
@@ -433,6 +447,53 @@ def test_wand_skips_blocks(spark, tmp_path_factory):
     assert maxscore_block_decodes < total_blocks
     assert list(map(tuple, out_m.itertuples(index=False))) == \
         list(map(tuple, out_d.itertuples(index=False)))
+
+
+def test_wand_skips_blocks_driver_route(spark, prune_index):
+    """test_wand_skips_blocks on the driver route: a local=True WAND
+    search on a fresh handle decodes, through the handle's
+    decoded-block cache, fewer blocks than the query terms have, and
+    returns daat's rows."""
+    from irkit_spark.operators.query import Index
+    out, q, total_blocks = prune_index
+    idx = Index(spark, out)
+    wand = [tuple(r) for r in search(idx, q, 3, "wand", local=True).collect()]
+    decoded = sum(len(c) for c in idx._dec_cache.values())
+    assert 0 < decoded < total_blocks
+    assert wand == [tuple(r) for r in search(idx, q, 3, "daat").collect()]
+
+
+def test_driver_route_frame_budget(index_small, monkeypatch, count_jobs):
+    """A warm driver-route batch_search builds the same small, fixed
+    number of pandas frames for 20 queries as for one (the kernel runs
+    on numpy arrays; frames appear only at the Spark boundary), however
+    many queries and shards the set touches."""
+    import irkit_spark.operators.query as qmod
+    from irkit_spark.operators.query import batch_search
+    idx, _ = index_small
+    frames = [0]
+
+    class CountingPd:
+        def __getattr__(self, name):
+            return getattr(pd, name)
+
+        def DataFrame(self, *a, **kw):
+            frames[0] += 1
+            return pd.DataFrame(*a, **kw)
+
+    monkeypatch.setattr(qmod, "pd", CountingPd())
+    qs = {str(q["query_id"]): q["query"] for q in query_set(20)}
+
+    def built(queries):
+        batch_search(idx, queries, k=10).collect()   # warm the caches
+        before = frames[0]
+        rows, n_jobs = count_jobs(
+            lambda: batch_search(idx, queries, k=10).collect())
+        assert n_jobs == 0 and rows             # the driver route
+        return frames[0] - before
+
+    one, many = built({"0": qs["0"]}), built(qs)
+    assert one == many <= 2
 
 
 def test_text_taat_oracle_path(spark, index_small, pages_small):
